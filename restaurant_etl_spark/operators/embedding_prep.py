@@ -135,16 +135,19 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         "scale",
         F.transform(F.col("dv"), lambda x: F.round(x * F.col("scale")).cast("long")).alias("q"),
     )
+    # the error divides by the exact scale, so it is computed here: in the
+    # final select, F.col("scale") would resolve to the 5-dp rounded alias
     err = F.aggregate(
         F.zip_with(F.col("dv"), F.col("q"), lambda x, qx: F.abs(x - qx / F.col("scale"))),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+    t = t.select("vec_id", "scale", "q", err.alias("err"))
     return t.select(
         "vec_id",
         F.round("scale", 5).alias("scale"),
         F.array_join(F.transform(F.col("q"), lambda x: x.cast("string")), ",").alias("q8"),
-        F.round(err, 4).alias("recon_err_l1"),
+        F.round("err", 4).alias("recon_err_l1"),
     )
 
 

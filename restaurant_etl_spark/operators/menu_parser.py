@@ -114,7 +114,9 @@ def parse_lines(lines: DataFrame) -> DataFrame:
         }
     )
     s = s.withColumn(
-        "__toks", F.filter(F.transform(F.split("__tail", "/"), F.trim), lambda x: x != "")
+        "__toks",
+        # a bare F.trim would receive the element index as its trim-string
+        F.filter(F.transform(F.split("__tail", "/"), lambda x: F.trim(x)), lambda x: x != ""),
     )
     s = s.withColumns(
         {
@@ -144,7 +146,7 @@ def parse_lines(lines: DataFrame) -> DataFrame:
     )
     name_expr = F.regexp_replace(F.regexp_replace(raw_name, r"[\s.\-:]+$", ""), TAG_SUFFIX_RE, "")
     s = s.withColumn("__name", name_expr)
-    s = s.withColumn("__name_parts", F.transform(F.split("__name", "/"), F.trim))
+    s = s.withColumn("__name_parts", F.transform(F.split("__name", "/"), lambda x: F.trim(x)))
 
     name = F.col("__name")
     name_parts = F.col("__name_parts")

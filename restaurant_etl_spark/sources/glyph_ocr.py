@@ -12,9 +12,11 @@ spans) and words with per-word confidence — so the entire downstream
 pipeline (confidence gates, span attribution, success semantics) runs
 unchanged against pixels it actually decoded.
 
-Recognition is exact template matching over the same font renders use:
-confidence per glyph = fraction of agreeing pixels in the 5×5 cell, so
-clean renders score 1.0 and corrupted pixels degrade confidence
+Recognition is exact template matching over the same font renders use,
+done as one array match per text line: the line's 5×5 cells are compared
+against every glyph template at once and each cell's agreeing pixels are
+counted per glyph. Confidence comes from the fraction of agreeing pixels,
+so clean renders score 1.0 and corrupted pixels degrade confidence
 continuously — which is what lets tests exercise the P3 confidence
 cutoffs (0.5 / 0.6) with real failing pixels.
 
@@ -93,6 +95,11 @@ assert len({bm.tobytes() for bm in _bitmaps.values()}) == len(_bitmaps), (
     "glyph bitmaps must be pairwise distinct for exact template matching"
 )
 
+_GLYPHS = list(_bitmaps)
+#: (G, 25) stacked templates in FONT order; its ink counts per glyph
+_TEMPLATES = np.stack([bm.reshape(-1) for bm in _bitmaps.values()]).astype(np.int32)
+_TEMPLATE_INK = _TEMPLATES.sum(axis=1)
+
 
 def render_text_image(text: str) -> np.ndarray:
     """Render text (newline-separated lines) as a grayscale uint8 image:
@@ -115,21 +122,25 @@ def render_text_image(text: str) -> np.ndarray:
     return img
 
 
-def _match_cell(cell: np.ndarray) -> tuple[str, float]:
-    """Best glyph for a 5×5 ink bitmap, with MARGIN-normalized confidence
-    (best - second) / (1 - second): an exact match scores 1.0, while noise
-    that matches several glyphs about equally well collapses toward 0 —
-    raw best-match agreement stays ~0.8 on garbage (some glyph always
-    agrees on most pixels), which would defeat the confidence gates."""
-    best_ch, best, second = " ", 0.0, 0.0
-    for ch, bm in _bitmaps.items():
-        score = float((cell == bm).mean())
-        if score > best:
-            best_ch, best, second = ch, score, best
-        elif score > second:
-            second = score
-    conf = 1.0 if best >= 1.0 else (best - second) / (1.0 - second)
-    return best_ch, max(conf, 0.0)
+def _match_cells(cells: np.ndarray) -> tuple[list[str], list[float]]:
+    """Best glyph for each row of an (n, 25) 0/1 ink array, with
+    MARGIN-normalized confidence (best - second) / (1 - second): an exact
+    match scores 1.0, while noise that matches several glyphs about equally
+    well collapses toward 0 — raw best-match agreement stays ~0.8 on garbage
+    (some glyph always agrees on most pixels), which would defeat the
+    confidence gates. ``best`` is the first glyph (FONT order) with the most
+    agreeing pixels; ``second`` is the runner-up score counted with ties, so
+    two equally good glyphs give confidence 0."""
+    c = cells.astype(np.int32)
+    n_px = GLYPH_H * GLYPH_W
+    # agreeing pixels = both ink + both background
+    agree = n_px - c.sum(axis=1)[:, None] - _TEMPLATE_INK[None, :] + 2 * (c @ _TEMPLATES.T)
+    best_i = agree.argmax(axis=1)
+    best = agree[np.arange(len(c)), best_i] / n_px
+    second = np.partition(agree, -2, axis=1)[:, -2] / n_px
+    with np.errstate(divide="ignore", invalid="ignore"):
+        conf = np.where(best >= 1.0, 1.0, (best - second) / (1.0 - second))
+    return [_GLYPHS[i] for i in best_i], np.maximum(conf, 0.0).tolist()
 
 
 def recognize_pixels(px: np.ndarray) -> dict:
@@ -166,17 +177,20 @@ def recognize_pixels(px: np.ndarray) -> dict:
     for li in line_indices:
         y0 = 1 + li * LINE_H
         band = ink[y0 : y0 + GLYPH_H]
+        if band.shape[0] < GLYPH_H:  # a line cut off by the image edge
+            continue
         n_cells = (band.shape[1] - 1) // CELL_W
-        chars: list[tuple[str, float]] = []
-        for c in range(n_cells):
-            x = 1 + c * CELL_W
-            cell = band[:GLYPH_H, x : x + GLYPH_W]
-            if cell.shape != (GLYPH_H, GLYPH_W):
-                break
-            if not cell.any():
-                chars.append((" ", 1.0))
-            else:
-                chars.append(_match_cell(cell))
+        # (n_cells, 25): each cell's 5×5 window, the 1px gap column dropped
+        cells = (
+            band[:, 1 : 1 + n_cells * CELL_W]
+            .reshape(GLYPH_H, n_cells, CELL_W)[:, :, :GLYPH_W]
+            .transpose(1, 0, 2)
+            .reshape(n_cells, GLYPH_H * GLYPH_W)
+        )
+        inked = np.flatnonzero(cells.any(axis=1))
+        chars = [(" ", 1.0)] * n_cells
+        for i, ch, conf in zip(inked.tolist(), *_match_cells(cells[inked])):
+            chars[i] = (ch, conf)
         content = "".join(ch for ch, _ in chars).rstrip()
         if not content:
             continue
@@ -252,25 +266,38 @@ def make_scanned_pdf(px: np.ndarray) -> bytes:
     return bytes(out)
 
 
-_PDF_IMAGE_RE = re.compile(
-    rb"<<([^>]*?/Subtype\s*/Image[^>]*?)>>\s*stream\r?\n(.*?)\r?\nendstream",
-    re.DOTALL,
-)
+_PDF_IMAGE_RE = re.compile(rb"<<([^>]*?/Subtype\s*/Image[^>]*?)>>\s*stream\r?\n")
+#: a direct ``/Length n`` — not an indirect ``/Length n 0 R`` reference
+_PDF_DIRECT_LENGTH_RE = re.compile(rb"/Length\s+(\d+)\b(?!\s+\d+\s+R)")
 
 
 def _pdf_embedded_gray(content: bytes) -> np.ndarray:
     """Pull the first /DeviceGray 8-bit Flate image XObject out of a PDF —
     the 'rasterize' step for scanned pages (real scanners embed exactly
     this; a full renderer is out of scope and unnecessary for template
-    glyphs)."""
+    glyphs). The stream is taken by its direct /Length; without one it runs
+    to ``endstream``, and the end-of-line bytes before that keyword are left
+    over after the Flate stream ends (compressed data may itself end in
+    0x0D, so no trailing byte can be stripped on sight)."""
     for m in _PDF_IMAGE_RE.finditer(content):
-        head, data = m.group(1), m.group(2)
+        head, start = m.group(1), m.end()
         wm = re.search(rb"/Width\s+(\d+)", head)
         hm = re.search(rb"/Height\s+(\d+)", head)
         if not (wm and hm and b"/DeviceGray" in head and b"/FlateDecode" in head):
             continue
+        lm = _PDF_DIRECT_LENGTH_RE.search(head)
+        if lm:
+            data = content[start : start + int(lm.group(1))]
+        else:
+            end = content.find(b"endstream", start)
+            if end < 0:
+                continue
+            data = content[start:end]
+        inflate = zlib.decompressobj()
+        raw = inflate.decompress(data)
+        if not inflate.eof:
+            raise ValueError("truncated Flate image stream in PDF")
         w, h = int(wm.group(1)), int(hm.group(1))
-        raw = zlib.decompress(data)
         if len(raw) < w * h:
             continue
         return np.frombuffer(raw, dtype=np.uint8, count=w * h).reshape(h, w)

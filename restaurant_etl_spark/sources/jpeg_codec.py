@@ -6,8 +6,13 @@ Decoder: baseline sequential DCT (SOF0), general DQT/DHT parsing (so
 real-world files with the Annex K tables decode too), byte-unstuffing and
 restart markers, grayscale and YCbCr with sampling factors 1-2 (4:4:4,
 4:2:2, 4:2:0; nearest-neighbor chroma upsampling), orthonormal 8×8 IDCT.
-Progressive (SOF2) and arithmetic coding raise so callers fall back to
-the stub rather than emit wrong pixels.
+Huffman symbols decode through a 16-bit lookahead table (built once per
+distinct DHT) indexed by the next 16 bits of the stream, and value bits
+come off a bit accumulator n at a time. Only the entropy decode runs per
+block: dequantized coefficient blocks are collected per component, inverse
+transformed as one stacked matmul and scattered into the component planes
+by a reshape. Progressive (SOF2) and arithmetic coding raise so callers
+fall back to the stub rather than emit wrong pixels.
 
 Encoder (test/fixture harness): 4:4:4 or grayscale, FDCT + configurable
 quantization, canonical Huffman tables it DECLARES in its own DHT
@@ -25,6 +30,7 @@ basis matrix and its transpose.
 
 from __future__ import annotations
 
+import functools
 import struct
 
 import numpy as np
@@ -40,6 +46,7 @@ ZIGZAG = np.array([
     58, 59, 52, 45, 38, 31, 39, 46,
     53, 60, 61, 54, 47, 55, 62, 63,
 ], dtype=np.int32)
+_ZIGZAG_LIST = ZIGZAG.tolist()
 
 #: orthonormal 8x8 DCT-II basis: T[u, x] = c(u) cos((2x+1)uπ/16)
 _T = np.zeros((8, 8))
@@ -47,10 +54,6 @@ for _u in range(8):
     _c = np.sqrt(1 / 8) if _u == 0 else np.sqrt(2 / 8)
     for _x in range(8):
         _T[_u, _x] = _c * np.cos((2 * _x + 1) * _u * np.pi / 16)
-
-
-def _idct2(coeffs: np.ndarray) -> np.ndarray:
-    return _T.T @ coeffs @ _T
 
 
 def _fdct2(block: np.ndarray) -> np.ndarray:
@@ -61,55 +64,52 @@ def _fdct2(block: np.ndarray) -> np.ndarray:
 
 
 class _BitReader:
-    """MSB-first entropy-segment reader with 0xFF00 unstuffing; RST
-    markers byte-align and signal a predictor reset."""
+    """MSB-first entropy-segment reader with 0xFF00 unstuffing. At a marker
+    (RSTn or end of scan) it pads with 1-bits and does not consume the
+    marker; ``sync_restart`` steps over a pending RSTn."""
 
     def __init__(self, data: bytes, pos: int) -> None:
         self.data = data
         self.pos = pos
-        self.acc = 0
+        self.acc = 0  # the low ``nbits`` bits are unread
         self.nbits = 0
-        self.restart_hit = False
 
-    def _fill(self) -> None:
+    def _fill(self, need: int) -> None:
         d = self.data
-        while self.nbits <= 24:
-            if self.pos >= len(d):
+        acc, nbits, pos = self.acc, self.nbits, self.pos
+        while nbits < need:
+            if pos >= len(d):
                 # pad with 1s (spec: marker-truncated streams pad)
                 b = 0xFF
             else:
-                b = d[self.pos]
+                b = d[pos]
                 if b == 0xFF:
-                    nxt = d[self.pos + 1] if self.pos + 1 < len(d) else 0xD9
+                    nxt = d[pos + 1] if pos + 1 < len(d) else 0xD9
                     if nxt == 0x00:
-                        self.pos += 2
-                    elif 0xD0 <= nxt <= 0xD7:  # RSTn: don't consume, pad
-                        self.restart_hit = True
-                        b = 0xFF
-                    else:  # real marker: end of scan, pad
+                        pos += 2
+                    else:  # RSTn or end-of-scan marker: don't consume, pad
                         b = 0xFF
                 else:
-                    self.pos += 1
-            self.acc = ((self.acc << 8) | b) & 0xFFFFFFFFFF
-            self.nbits += 8
+                    pos += 1
+            acc = (acc << 8) | b
+            nbits += 8
+        self.acc, self.nbits, self.pos = acc & ((1 << nbits) - 1), nbits, pos
 
-    def read_bit(self) -> int:
-        if self.nbits == 0:
-            self._fill()
-        self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
+    def peek16(self) -> int:
+        if self.nbits < 16:
+            self._fill(32)
+        return self.acc >> (self.nbits - 16) & 0xFFFF
 
     def read_bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
+        if self.nbits < n:
+            self._fill(max(n, 32))
+        self.nbits -= n
+        return self.acc >> self.nbits & ((1 << n) - 1)
 
     def sync_restart(self) -> None:
         """Consume the pending RSTn marker and byte-align."""
         self.acc = 0
         self.nbits = 0
-        self.restart_hit = False
         d = self.data
         while self.pos + 1 < len(d):
             if d[self.pos] == 0xFF and 0xD0 <= d[self.pos + 1] <= 0xD7:
@@ -119,28 +119,39 @@ class _BitReader:
         raise ValueError("expected restart marker")
 
 
+@functools.lru_cache(maxsize=64)
+def _lookahead(bits: bytes, symbols: bytes) -> tuple[int, ...]:
+    """Canonical Huffman codes from a DHT (BITS + symbol list) as a table
+    indexed by the next 16 stream bits: entry = (code length << 8) | symbol,
+    0 where no code is a prefix of those bits. Codes past 2^length (an
+    over-full BITS list) can never be read, so they get no entries."""
+    table = [0] * (1 << 16)
+    code = 0
+    k = 0
+    for length in range(1, 17):
+        for _ in range(bits[length - 1]):
+            entry = (length << 8) | symbols[k]
+            if code < (1 << length):
+                span = 1 << (16 - length)
+                table[code * span : (code + 1) * span] = [entry] * span
+            code += 1
+            k += 1
+        code <<= 1
+    return tuple(table)
+
+
 class _Huff:
-    """Canonical Huffman table from a DHT (BITS + symbol list)."""
+    """Canonical Huffman table from a DHT, decoded by 16-bit lookahead."""
 
     def __init__(self, bits: list[int], symbols: bytes) -> None:
-        self.lookup: dict[tuple[int, int], int] = {}
-        code = 0
-        k = 0
-        for length in range(1, 17):
-            for _ in range(bits[length - 1]):
-                self.lookup[(length, code)] = symbols[k]
-                code += 1
-                k += 1
-            code <<= 1
+        self.table = _lookahead(bytes(bits), bytes(symbols))
 
     def decode(self, br: _BitReader) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | br.read_bit()
-            sym = self.lookup.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code in entropy stream")
+        entry = self.table[br.peek16()]
+        if not entry:
+            raise ValueError("invalid Huffman code in entropy stream")
+        br.nbits -= entry >> 8
+        return entry & 0xFF
 
 
 def _extend(v: int, t: int) -> int:
@@ -229,49 +240,50 @@ def _decode_scan(data, pos, frame, scan_sel, qt, huff_dc, huff_ac, restart_inter
     vmax = max(c["v"] for c in comps)
     mcux = (w + 8 * hmax - 1) // (8 * hmax)
     mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    planes = []
-    for c in comps:
-        pw, ph = mcux * 8 * c["h"], mcuy * 8 * c["v"]
-        planes.append(np.zeros((ph, pw), dtype=np.float64))
+    # per component: natural-order coefficients of every block, in decode
+    # order (MCU raster, then the component's v×h blocks inside each MCU)
+    coefs = [
+        np.zeros((mcuy * mcux * c["v"] * c["h"], 64), dtype=np.float64) for c in comps
+    ]
+    tables = [(huff_dc[scan_sel[c["id"]][0]], huff_ac[scan_sel[c["id"]][1]]) for c in comps]
     br = _BitReader(data, pos)
+    read_bits = br.read_bits
     pred = [0] * len(comps)
-    n_mcu = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and n_mcu and n_mcu % restart_interval == 0:
-                br.sync_restart()
-                pred = [0] * len(comps)
-            for ci, c in enumerate(comps):
-                dc_t = huff_dc[scan_sel[c["id"]][0]]
-                ac_t = huff_ac[scan_sel[c["id"]][1]]
-                q = qt[c["tq"]]
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        coeffs = np.zeros(64, dtype=np.float64)
-                        t = dc_t.decode(br)
-                        pred[ci] += _extend(br.read_bits(t), t)
-                        coeffs[0] = pred[ci]
-                        k = 1
-                        while k < 64:
-                            rs = ac_t.decode(br)
-                            r, s = rs >> 4, rs & 0xF
-                            if rs == 0x00:  # EOB
-                                break
-                            if rs == 0xF0:  # ZRL
-                                k += 16
-                                continue
-                            k += r
-                            if k > 63:
-                                raise ValueError("AC index overflow")
-                            coeffs[k] = _extend(br.read_bits(s), s)
-                            k += 1
-                        block = np.zeros(64, dtype=np.float64)
-                        block[ZIGZAG] = coeffs
-                        spatial = _idct2(block.reshape(8, 8) * q) + 128.0
-                        y0 = (my * c["v"] + by) * 8
-                        x0 = (mx * c["h"] + bx) * 8
-                        planes[ci][y0 : y0 + 8, x0 : x0 + 8] = spatial
-            n_mcu += 1
+    for n_mcu in range(mcuy * mcux):
+        if restart_interval and n_mcu and n_mcu % restart_interval == 0:
+            br.sync_restart()
+            pred = [0] * len(comps)
+        for ci, c in enumerate(comps):
+            dc_t, ac_t = tables[ci]
+            per_mcu = c["v"] * c["h"]
+            for blk in coefs[ci][n_mcu * per_mcu : (n_mcu + 1) * per_mcu]:
+                t = dc_t.decode(br)
+                pred[ci] += _extend(read_bits(t), t)
+                blk[0] = pred[ci]
+                k = 1
+                while k < 64:
+                    rs = ac_t.decode(br)
+                    if rs == 0x00:  # EOB
+                        break
+                    if rs == 0xF0:  # ZRL
+                        k += 16
+                        continue
+                    k += rs >> 4
+                    if k > 63:
+                        raise ValueError("AC index overflow")
+                    size = rs & 0xF
+                    blk[_ZIGZAG_LIST[k]] = _extend(read_bits(size), size)
+                    k += 1
+    planes = []
+    for ci, c in enumerate(comps):
+        blocks = coefs[ci].reshape(-1, 8, 8) * qt[c["tq"]]
+        spatial = _T.T @ blocks @ _T + 128.0
+        # (mcuy, mcux, v, h, 8, 8) blocks → (mcuy·v·8, mcux·h·8) plane
+        planes.append(
+            spatial.reshape(mcuy, mcux, c["v"], c["h"], 8, 8)
+            .transpose(0, 2, 4, 1, 3, 5)
+            .reshape(mcuy * c["v"] * 8, mcux * c["h"] * 8)
+        )
     # upsample to full resolution and crop
     full = []
     for ci, c in enumerate(comps):

@@ -121,47 +121,44 @@ _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 def _png_unfilter(raw: bytes, height: int, stride: int, bpp: int) -> np.ndarray:
     """Reverse the per-scanline PNG filters (spec §9: None/Sub/Up/Average/
-    Paeth). Each scanline is 1 filter-type byte + ``stride`` sample bytes;
-    Sub/Average/Paeth recur on the previous pixel so those rows run a
-    per-byte loop — rows with filter 0/2 (the common case for synthetic
-    and screenshot-like content) stay vectorized."""
-    out = np.zeros((height, stride), dtype=np.uint8)
+    Paeth). Each scanline is 1 filter-type byte + ``stride`` sample bytes.
+    None, Sub (a per-channel running sum mod 256) and Up are whole-row
+    array operations; Average and Paeth recur on the reconstructed previous
+    pixel, so those rows run a per-byte loop over Python ints."""
+    out = bytearray()
+    prev = bytes(stride)
     pos = 0
-    prev = np.zeros(stride, dtype=np.int32)
-    for y in range(height):
+    for _ in range(height):
         ftype = raw[pos]
-        line = np.frombuffer(raw, dtype=np.uint8, count=stride, offset=pos + 1).astype(
-            np.int32
-        )
+        line = raw[pos + 1 : pos + 1 + stride]
         pos += 1 + stride
         if ftype == 0:  # None
             cur = line
-        elif ftype == 2:  # Up
-            cur = (line + prev) & 0xFF
         elif ftype == 1:  # Sub
-            cur = line
-            for i in range(bpp, stride):
-                cur[i] = (cur[i] + cur[i - bpp]) & 0xFF
+            sums = np.frombuffer(line, dtype=np.uint8).reshape(-1, bpp).cumsum(axis=0)
+            cur = (sums & 0xFF).astype(np.uint8).tobytes()
+        elif ftype == 2:  # Up (uint8 addition wraps mod 256)
+            cur = (np.frombuffer(line, np.uint8) + np.frombuffer(prev, np.uint8)).tobytes()
         elif ftype == 3:  # Average
-            cur = line
-            for i in range(stride):
-                left = cur[i - bpp] if i >= bpp else 0
-                cur[i] = (cur[i] + ((left + prev[i]) >> 1)) & 0xFF
+            cur = bytearray(line)
+            for i in range(min(bpp, stride)):
+                cur[i] = (cur[i] + (prev[i] >> 1)) & 0xFF
+            for i in range(bpp, stride):
+                cur[i] = (cur[i] + ((cur[i - bpp] + prev[i]) >> 1)) & 0xFF
         elif ftype == 4:  # Paeth
-            cur = line
-            for i in range(stride):
-                a = int(cur[i - bpp]) if i >= bpp else 0
-                b = int(prev[i])
-                c = int(prev[i - bpp]) if i >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+            cur = bytearray(line)
+            for i in range(min(bpp, stride)):  # a = c = 0: predictor is b
+                cur[i] = (cur[i] + prev[i]) & 0xFF
+            for i in range(bpp, stride):
+                a, b, c = cur[i - bpp], prev[i], prev[i - bpp]
+                pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - 2 * c)
                 pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
                 cur[i] = (cur[i] + pred) & 0xFF
         else:
             raise ValueError(f"unknown PNG filter type {ftype}")
-        out[y] = cur.astype(np.uint8)
+        out += cur
         prev = cur
-    return out
+    return np.frombuffer(out, dtype=np.uint8).reshape(height, stride)
 
 
 def decode_png(content: bytes) -> np.ndarray:

@@ -56,3 +56,38 @@ def test_simhash_keep_canonicals_are_kept_and_minimal(spark, sf_dir):
             assert nxt.doc_id < cur.doc_id
             cur = nxt
         assert cur.is_kept
+
+
+def test_quantize_error_divides_by_exact_scale(spark, tmp_path):
+    """recon_err_l1 uses the exact 127/amax scale, as the oracle does, not
+    the 5-dp rounded ``scale`` output column. Vector 1 is built so that its
+    error sum (0.549749…) sits just below a 4-dp boundary that the rounded
+    scale (29.10417 for 29.104165…) pushes it across (0.549750…)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from restaurant_etl_spark.operators.registry import load_all
+    from scripts.check_oracle import canonicalize
+
+    vecs = [[((i * p) % 97 - 48) / d for i in range(64)] for p, d in [(13, 11), (5, 9), (40, 30)]]
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([1, 2, 3], pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float32())),
+                "label": pa.array([0, 1, 0], pa.int32()),
+            }
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    sdf = embedding_quantize_int8(spark, str(tmp_path))
+    got = {r.vec_id: r.recon_err_l1 for r in sdf.collect()}
+    assert got[1] == 0.5497
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{tmp_path}/embeddings.parquet'")
+    res = con.execute(load_all()["embedding_quantize_int8"].oracle)
+    oracle = canonicalize([d[0] for d in res.description], res.fetchall())
+    con.close()
+    assert canonicalize(sdf.columns, [tuple(r) for r in sdf.collect()]) == oracle

@@ -64,6 +64,17 @@ def test_rejects_progressive_and_garbage():
         decode_jpeg(b"\xff\xd8\xffnot a real jpeg")
 
 
+def test_code_outside_the_huffman_table_raises():
+    """The encoder's DC table holds 12 five-bit codes; 0b11111 is none of
+    them, so the lookahead finds no entry and the decode must refuse."""
+    blob = bytearray(encode_jpeg(np.full((8, 8), 10, dtype=np.uint8)))
+    sos = blob.find(b"\xff\xda")
+    data_at = sos + 2 + int.from_bytes(blob[sos + 2 : sos + 4], "big")
+    blob[data_at] = 0xF8
+    with pytest.raises(ValueError, match="invalid Huffman code"):
+        decode_jpeg(bytes(blob))
+
+
 def test_jpeg_features_through_spark(spark):
     """A solid-white JPEG through the feature path lands all histogram
     mass in the last bin — the real Huffman+IDCT decoder fed the

@@ -184,3 +184,20 @@ def test_document_metadata_struct(spark):
     assert meta["subcategories"] == ["Cold Starters", "Curries", "Hot Starters"]
     assert not meta["has_size_variants"] and not meta["has_half_full"]
     assert meta["detected_currency"] == "$"
+
+
+def test_slash_price_tokens_keep_trailing_digits(spark):
+    """Each slash-separated token is whitespace-trimmed only: a trim that
+    also stripped the element index ("0", "1") as characters would parse
+    $10 as 1.0 and $38.11 as 38.0."""
+    docs = spark.createDataFrame(
+        [(1, "Dal $10/$20"), (2, "Tea $34.39/$38.11"), (3, "Item 10 / Item 11 $4.00/$5.00")],
+        "doc_id int, text string",
+    )
+    got = {
+        r["item_name"]: (r["half_plate_price"], r["full_plate_price"], r["price"])
+        for r in parse_menu_documents(docs).collect()
+    }
+    assert got["Dal"][:2] == (10.0, 20.0)
+    assert got["Tea"][:2] == (34.39, 38.11)
+    assert got["Item 10"][2] == 4.0 and got["Item 11"][2] == 5.0

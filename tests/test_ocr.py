@@ -215,3 +215,30 @@ def test_scanned_pdf_declares_correct_stream_length():
         end = pdf.index(b"endstream", start)
         actual = len(pdf[start:end].rstrip(b"\r\n"))
         assert declared == actual, (declared, actual)
+
+
+def test_scanned_pdf_whose_flate_stream_ends_in_cr():
+    """A compressed image that ends in 0x0D must not lose that byte to the
+    end-of-line before ``endstream``: the stream is taken by its /Length,
+    and without one the EOL bytes are left over after the Flate data."""
+    import re
+    import zlib
+
+    from restaurant_etl_spark.sources.glyph_ocr import (
+        make_scanned_pdf,
+        render_text_image,
+        template_ocr_transport,
+    )
+
+    text = "ITEM 1004 $1.25 X X X X"
+    px = render_text_image(text)
+    assert zlib.compress(px.tobytes())[-1] == 0x0D
+    pdf = make_scanned_pdf(px)
+    no_length = re.sub(rb"(/FlateDecode) /Length \d+", rb"\1", pdf)
+    crlf = no_length.replace(b"\nendstream", b"\r\nendstream")
+    indirect = re.sub(rb"(/FlateDecode /Length) \d+", rb"\1 9 0 R", pdf)
+    assert no_length.count(b"/Length") == pdf.count(b"/Length") - 1
+    assert b"/Length 9 0 R" in indirect
+    for blob in (pdf, no_length, crlf, indirect):
+        lines = template_ocr_transport(blob)["analyzeResult"]["pages"][0]["lines"]
+        assert [ln["content"] for ln in lines] == [text]
