@@ -23,6 +23,9 @@ declared rules and API behavior (SURVEY §7.4).
 
 from __future__ import annotations
 
+import functools
+
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -52,33 +55,16 @@ MP_RE = r"(?i)(market\s*price|\bM\.?P\.?)\s*$"
 SIZE_LABEL_RE = r"(?i)\(\s*small\s*/\s*medium\s*/\s*large\s*\)"
 HALF_LABEL_RE = r"(?i)\(\s*half\s*/\s*full\s*\)"
 TAG_SUFFIX_RE = r"(?i)\s*\((vegetarian|vegan|gluten[- ]free|mild|hot|spicy)\)\s*$"
+SPICE_RE = r"(?i)\b(extra hot|mild|spicy|hot)\b"
 
 _ITEM_FIELDS = ["item_name", "price", "half_plate_price", "full_plate_price",
                 "small_price", "medium_price", "large_price", "display_override"]
 
 
-def _item(name: Column, price=None, half=None, full=None, small=None, medium=None,
-          large=None, display=None) -> Column:
-    null_d = F.lit(None).cast("double")
-    null_s = F.lit(None).cast("string")
-    return F.struct(
-        name.alias("item_name"),
-        (price if price is not None else null_d).alias("price"),
-        (half if half is not None else null_d).alias("half_plate_price"),
-        (full if full is not None else null_d).alias("full_plate_price"),
-        (small if small is not None else null_d).alias("small_price"),
-        (medium if medium is not None else null_d).alias("medium_price"),
-        (large if large is not None else null_d).alias("large_price"),
-        (display if display is not None else null_s).alias("display_override"),
-    )
-
-
-def split_lines(docs: DataFrame, doc_id: str = "doc_id", text: str = "text") -> DataFrame:
-    """Normalize (F1) then explode into a (doc_id, line_no, line) table."""
-    normalized = docs.select(doc_id, normalize_extracted_text(F.col(text)).alias("__norm"))
-    return normalized.select(
-        doc_id, F.posexplode(F.split(F.col("__norm"), "\n")).alias("line_no", "line")
-    ).filter(F.length("line") > 0)
+def _item(name: Column, **values: Column) -> Column:
+    """One item struct: ``values`` by _ITEM_FIELDS name, every other field null."""
+    nulls = {f: F.lit(None).cast("string" if f == "display_override" else "double") for f in _ITEM_FIELDS}
+    return F.struct(name.alias("item_name"), *[values.get(f, nulls[f]).alias(f) for f in _ITEM_FIELDS[1:]])
 
 
 ITEM_ARRAY_DDL = (
@@ -88,189 +74,182 @@ ITEM_ARRAY_DDL = (
 )
 
 
-def parse_lines(lines: DataFrame) -> DataFrame:
-    """(doc_id, line_no, line) → per-line classification + raw item array.
+# The parser's ~300 Column expressions are built once per JVM (the ``jvm``
+# argument only keys the cache) as tuples of DataFrame → DataFrame steps:
+# with call-site tracking, rebuilding them per call took more Py4J round
+# trips than planning and running the parse.
 
-    Adds columns: __kind ('header'/'item'/'other'), __currency, __items.
 
-    Heavy intermediates (stripped line, price tail, token/value arrays,
-    cleaned name) are staged as real multi-referenced columns: Catalyst's
-    CollapseProject keeps them materialized instead of inlining the regex
-    trees into every consumer, which would re-evaluate each regex per
-    reference (and per array element inside lambdas).
-    """
-    stripped = F.trim(
-        F.regexp_replace(F.regexp_replace(F.col("line"), SIZE_LABEL_RE, ""), HALF_LABEL_RE, "")
+def _select(*cols: Column):
+    return lambda df: df.select(*cols)
+
+
+def _where(cond: Column):
+    return lambda df: df.filter(cond)
+
+
+def _run(df: DataFrame, steps) -> DataFrame:
+    return functools.reduce(lambda d, step: step(d), steps, df)
+
+
+@functools.cache
+def _split_steps(jvm) -> tuple:
+    norm = normalize_extracted_text(F.col("text"))
+    return (
+        _select(F.col("doc_id"), F.posexplode(F.split(norm, "\n")).alias("line_no", "line")),
+        _where(F.length("line") > 0),
     )
-    s = lines.withColumn("__stripped", stripped)
 
+
+def split_lines(docs: DataFrame, doc_id: str = "doc_id", text: str = "text") -> DataFrame:
+    """Normalize (F1) then explode into a (doc_id, line_no, line) table."""
+    return _run(docs.select(doc_id, text).toDF("doc_id", "text"), _split_steps(SparkContext._gateway))
+
+
+def _classify_steps() -> list:
+    """(doc_id, line_no, line) → per-line (__currency, __items, __kind),
+    where __kind is 'header'/'subheader'/'item'/'other'.
+
+    Heavy intermediates (stripped line, price tail, header flag, token/value
+    arrays, cleaned name) are staged as real multi-referenced columns:
+    Catalyst's CollapseProject keeps them materialized instead of inlining
+    the regex trees into every consumer, which would re-evaluate each regex
+    per reference (and per array element inside lambdas).
+    """
+    line, stripped = F.col("line"), F.col("__stripped")
+    tail, range_lo, is_mp = F.col("__tail"), F.col("__range_lo"), F.col("__is_mp")
+    is_header, vals = F.col("__is_header"), F.col("__vals")
+    name, name_parts = F.col("__name"), F.col("__name_parts")
+    is_range, priced = range_lo != "", tail != ""
+
+    # a bare F.trim would receive the element index as its trim-string
+    toks = F.filter(F.transform(F.split(tail, "/"), lambda x: F.trim(x)), lambda x: x != "")
+    vals_expr = F.transform("__toks", lambda t: F.regexp_replace(t, r"[^0-9.]", "").cast("double"))
+    curs = F.filter(F.transform("__toks", lambda t: F.regexp_extract(t, r"^([$₹€£¥])", 1)), lambda c: c != "")
+
+    # name = line minus the matched price suffix, trailing filler trimmed.
     # "100-150" also matches PRICE_TAIL on its last token, so the range
     # branch must win whenever a dash immediately precedes the tail
-    s = s.withColumns(
-        {
-            "__tail": F.regexp_extract("__stripped", PRICE_TAIL, 1),
-            "__range_lo": F.regexp_extract("__stripped", PRICE_RANGE, 1),
-            "__is_mp": F.col("__stripped").rlike(MP_RE),
-        }
-    )
-    s = s.withColumn(
-        "__toks",
-        # a bare F.trim would receive the element index as its trim-string
-        F.filter(F.transform(F.split("__tail", "/"), lambda x: F.trim(x)), lambda x: x != ""),
-    )
-    s = s.withColumns(
-        {
-            "__vals": F.transform("__toks", lambda t: F.regexp_replace(t, r"[^0-9.]", "").cast("double")),
-            "__curs": F.filter(
-                F.transform("__toks", lambda t: F.regexp_extract(t, r"^([$₹€£¥])", 1)),
-                lambda c: c != "",
-            ),
-        }
-    )
-
-    tail = F.col("__tail")
-    range_lo = F.col("__range_lo")
-    is_mp = F.col("__is_mp")
-    is_range = range_lo != ""
-    vals = F.col("__vals")
-
-    # name = line minus the matched price suffix, trailing filler trimmed
-    name_base = F.when(
-        tail != "",
-        F.substring(F.col("__stripped"), F.lit(1), F.length("__stripped") - F.length(tail)),
-    )
+    name_base = F.when(priced, F.substring(stripped, F.lit(1), F.length(stripped) - F.length(tail)))
     raw_name = (
-        F.when(is_mp, F.regexp_replace("__stripped", MP_RE, ""))
-        .when(is_range, F.regexp_replace("__stripped", PRICE_RANGE, ""))
+        F.when(is_mp, F.regexp_replace(stripped, MP_RE, ""))
+        .when(is_range, F.regexp_replace(stripped, PRICE_RANGE, ""))
         .otherwise(name_base)
     )
     name_expr = F.regexp_replace(F.regexp_replace(raw_name, r"[\s.\-:]+$", ""), TAG_SUFFIX_RE, "")
-    s = s.withColumn("__name", name_expr)
-    s = s.withColumn("__name_parts", F.transform(F.split("__name", "/"), lambda x: F.trim(x)))
 
-    name = F.col("__name")
-    name_parts = F.col("__name_parts")
-    n_names = F.size(name_parts)
-    n_prices = F.size(vals)
-
+    n_names, n_prices = F.size(name_parts), F.size(vals)
     v = lambda i: F.element_at(vals, i)  # noqa: E731 — 1-based
+    no_items = F.array().cast(ITEM_ARRAY_DDL)
     items = (
-        F.when(is_mp, F.array(_item(name, display=F.lit("MP"))))
+        F.when(is_header, no_items)
+        .when(is_mp, F.array(_item(name, display_override=F.lit("MP"))))
         .when(is_range, F.array(_item(name, price=range_lo.cast("double"))))
         .when(
-            (tail != "") & (n_names > 1) & (n_names == n_prices),
+            priced & (n_names > 1) & (n_names == n_prices),
             F.zip_with(name_parts, vals, lambda nm, val: _item(nm, price=val)),
         )
-        .when((tail != "") & (n_prices == 3), F.array(_item(name, small=v(1), medium=v(2), large=v(3))))
-        .when((tail != "") & (n_prices == 2), F.array(_item(name, half=v(1), full=v(2))))
-        .when((tail != "") & (n_prices == 1), F.array(_item(name, price=v(1))))
-        .otherwise(F.array().cast(ITEM_ARRAY_DDL))
+        .when(priced & (n_prices == 3),
+              F.array(_item(name, small_price=v(1), medium_price=v(2), large_price=v(3))))
+        .when(priced & (n_prices == 2), F.array(_item(name, half_plate_price=v(1), full_plate_price=v(2))))
+        .when(priced & (n_prices == 1), F.array(_item(name, price=v(1))))
+        .otherwise(no_items)
     )
-
-    classified = s.withColumns(
-        {
-            "__is_header": F.col("line").rlike(HEADER_RE),
-            "__is_subheader": ~F.col("line").rlike(HEADER_RE)
-            & F.col("__stripped").rlike(SUBHEADER_RE)
-            & (F.col("__tail") == ""),
-            "__currency": F.when(F.size("__curs") > 0, F.element_at("__curs", 1)),
-        }
-    )
-    classified = classified.withColumn(
-        "__items",
-        F.when(~F.col("__is_header"), items).otherwise(F.array().cast(ITEM_ARRAY_DDL)),
-    )
+    is_subheader = ~is_header & stripped.rlike(SUBHEADER_RE) & (tail == "")
     kind = (
-        F.when(F.col("__is_header"), "header")
+        F.when(is_header, "header")
         .when(F.col("__is_subheader"), "subheader")
         .when(F.size("__items") > 0, "item")
         .otherwise("other")
     )
-    return classified.withColumn("__kind", kind).drop(
-        "__stripped", "__tail", "__range_lo", "__is_mp", "__toks", "__vals",
-        "__curs", "__name", "__name_parts",
-    )
+
+    every = F.col("*")
+    stripped_expr = F.trim(F.regexp_replace(F.regexp_replace(line, SIZE_LABEL_RE, ""), HALF_LABEL_RE, ""))
+    keep = [F.col("doc_id"), F.col("line_no"), line]
+    return [
+        _select(every, stripped_expr.alias("__stripped")),
+        _select(
+            every,
+            F.regexp_extract(stripped, PRICE_TAIL, 1).alias("__tail"),
+            F.regexp_extract(stripped, PRICE_RANGE, 1).alias("__range_lo"),
+            stripped.rlike(MP_RE).alias("__is_mp"),
+            line.rlike(HEADER_RE).alias("__is_header"),
+        ),
+        _select(every, toks.alias("__toks")),
+        _select(every, vals_expr.alias("__vals"), curs.alias("__curs")),
+        _select(every, name_expr.alias("__name")),
+        _select(every, F.transform(F.split(name, "/"), lambda x: F.trim(x)).alias("__name_parts")),
+        _select(
+            *keep, is_header, is_subheader.alias("__is_subheader"),
+            F.when(F.size("__curs") > 0, F.element_at("__curs", 1)).alias("__currency"),
+            items.alias("__items"),
+        ),
+        _select(*keep, F.col("__currency"), F.col("__items"), kind.alias("__kind")),
+    ]
 
 
-def assemble_items(lines: DataFrame, attach_descriptions: bool = True) -> DataFrame:
-    """Classified lines → one row per menu item with category (rule 2),
-    description (rule 1/5), spice/dietary tags, raw prices. One shuffle on
-    doc_id (window) + optional aggregation for descriptions."""
-    parsed = parse_lines(lines)
+@functools.cache
+def _assemble_steps(jvm, attach_descriptions: bool) -> tuple:
+    doc_id, line_no, line = F.col("doc_id"), F.col("line_no"), F.col("line")
+    kind, anchor = F.col("__kind"), F.col("__anchor")
 
-    w = Window.partitionBy("doc_id").orderBy("line_no").rowsBetween(Window.unboundedPreceding, 0)
     # all five running-last propagations in ONE select: they share the
-    # window spec and are mutually independent, so Catalyst emits a
-    # single Window operator (one pass over the sorted lines). The
-    # previous sequential withColumn chain interleaved a Project between
-    # each pair, which blocked CollapseWindow and ran FIVE Window passes
-    # over every line (r15, guide §2.4 — same sort, same exchange, 5× the
-    # frame evaluation; values unchanged, expressions identical).
-    with_cat = parsed.select(
-        "*",
-        F.last(
-            F.when(F.col("__kind") == "header", F.initcap(F.lower(F.col("line")))),
-            ignorenulls=True,
-        ).over(w).alias("category"),
-        F.last(
-            F.when(F.col("__kind") == "header", F.col("line_no")), ignorenulls=True
-        ).over(w).alias("__cat_line"),
-        F.last(
-            F.when(F.col("__kind") == "subheader", F.col("line_no")), ignorenulls=True
-        ).over(w).alias("__sub_line"),
-        F.last(
-            F.when(
-                F.col("__kind") == "subheader",
-                F.initcap(F.lower(F.regexp_replace(F.col("line"), r":\s*$", ""))),
-            ),
-            ignorenulls=True,
-        ).over(w).alias("__sub_val"),
-        F.last(
-            F.when(F.col("__kind") == "item", F.col("line_no")), ignorenulls=True
-        ).over(w).alias("__anchor"),
-    ).withColumn(
-        # a subheader only applies under the category header it follows
-        # (BetterVersion: subcategories reset at each new section)
-        "subcategory",
-        F.when(F.col("__sub_line") > F.coalesce(F.col("__cat_line"), F.lit(-1)), F.col("__sub_val")),
-    )
+    # window spec and are mutually independent, so Catalyst emits a single
+    # Window operator (one pass over the sorted lines)
+    w = Window.partitionBy("doc_id").orderBy("line_no").rowsBetween(Window.unboundedPreceding, 0)
 
-    items = (
-        with_cat.filter(F.col("__kind") == "item")
-        .select(
-            "doc_id", "line_no", "category", "subcategory", "line",
-            F.col("__currency").alias("currency_symbol"),
-            F.posexplode("__items").alias("variant_idx", "it"),
-        )
-        .select(
-            "doc_id", "line_no", "category", "subcategory", "line", "currency_symbol", "variant_idx",
-            *[F.col(f"it.{f}").alias(f) for f in _ITEM_FIELDS],
-        )
+    def last_of(k: str, value: Column) -> Column:
+        return F.last(F.when(kind == k, value), ignorenulls=True).over(w)
+
+    window = _select(
+        F.col("*"),
+        last_of("header", F.initcap(F.lower(line))).alias("category"),
+        last_of("header", line_no).alias("__cat_line"),
+        last_of("subheader", line_no).alias("__sub_line"),
+        last_of("subheader", F.initcap(F.lower(F.regexp_replace(line, r":\s*$", "")))).alias("__sub_val"),
+        last_of("item", line_no).alias("__anchor"),
     )
+    # a subheader only applies under the category header it follows
+    # (BetterVersion: subcategories reset at each new section)
+    subcategory = F.when(
+        F.col("__sub_line") > F.coalesce(F.col("__cat_line"), F.lit(-1)), F.col("__sub_val")
+    ).alias("subcategory")
+    item_cols = [line_no, F.col("category"), subcategory, line, F.col("__currency").alias("currency_symbol")]
 
     if attach_descriptions:
-        descs = (
-            with_cat.filter((F.col("__kind") == "other") & F.col("__anchor").isNotNull())
-            .groupBy("doc_id", F.col("__anchor").alias("line_no"))
-            .agg(
-                F.array_join(
-                    F.transform(
-                        F.sort_array(F.collect_list(F.struct(F.col("line_no").alias("n"), F.col("line").alias("t")))),
-                        lambda s: s["t"],
-                    ),
-                    " ",
-                ).alias("description")
-            )
-        )
-        items = items.join(descs, ["doc_id", "line_no"], "left")
+        # every line from an item to the next one shares its __anchor, so
+        # one aggregate on (doc_id, __anchor) holds the item row and its
+        # description lines; the doc_id partitioning of the window already
+        # clusters those keys, so it adds no exchange
+        it = F.col("__it")
+        descs = F.sort_array(F.col("__desc"))
+        gather = [
+            _where(anchor.isNotNull()),
+            lambda df: df.groupBy(doc_id, anchor).agg(
+                F.first(F.when(kind == "item", F.struct(*item_cols, F.col("__items"))), ignorenulls=True)
+                .alias("__it"),
+                F.collect_list(F.when(kind == "other", F.struct(line_no.alias("n"), line.alias("t"))))
+                .alias("__desc"),
+            ),
+            _select(
+                doc_id, *[it[c].alias(c) for c in ("line_no", "category", "subcategory", "line", "currency_symbol")],
+                F.when(F.size(descs) > 0, F.array_join(F.transform(descs, lambda d: d["t"]), " "))
+                .alias("description"),
+                F.posexplode(it["__items"]).alias("variant_idx", "__v"),
+            ),
+        ]
     else:
-        items = items.withColumn("description", F.lit(None).cast("string"))
+        gather = [
+            _where(kind == "item"),
+            _select(
+                doc_id, *item_cols, F.lit(None).cast("string").alias("description"),
+                F.posexplode("__items").alias("variant_idx", "__v"),
+            ),
+        ]
 
-    blob = F.concat_ws(" ", F.col("line"), F.col("description"))
-    spice = F.when(
-        F.regexp_extract(blob, r"(?i)\b(extra hot|mild|spicy|hot)\b", 1) != "",
-        F.initcap(F.regexp_extract(blob, r"(?i)\b(extra hot|mild|spicy|hot)\b", 1)),
-    )
+    head = [doc_id, line_no, *[F.col(c) for c in ("category", "subcategory", "currency_symbol", "variant_idx")]]
+    out = [*head, *[F.col(f) for f in _ITEM_FIELDS], F.col("description")]
+    blob = F.col("__blob")
     tags = F.filter(
         F.array(
             F.when(blob.rlike(r"(?i)\bvegetarian\b|\(v\)"), "Vegetarian"),
@@ -279,39 +258,55 @@ def assemble_items(lines: DataFrame, attach_descriptions: bool = True) -> DataFr
         ),
         lambda x: x.isNotNull(),
     )
-    return items.withColumn("spice_level", spice).withColumn("dietary_tags", tags).drop("line")
-
-
-def finalize_items(items: DataFrame, currency_default: str = "$",
-                   detected_currency: Column | None = None) -> DataFrame:
-    """Raw parsed items → validated 13-column output table (P2 filter,
-    F2/F3/F5/F6/F7/F8 derivations; menu_models.py:177-221)."""
-    out = (
-        items.withColumn("item_name", clean_item_name(F.col("item_name")))
-        .withColumn("currency", normalize_currency(F.col("currency_symbol")))
+    return (
+        *_classify_steps(),
+        window,
+        *gather,
+        _select(
+            *head, *[F.col("__v")[f].alias(f) for f in _ITEM_FIELDS], F.col("description"),
+            F.concat_ws(" ", line, F.col("description")).alias("__blob"),
+        ),
+        _select(
+            *out, F.nullif(F.initcap(F.regexp_extract(blob, SPICE_RE, 1)), F.lit("")).alias("spice_level"),
+            tags.alias("dietary_tags"),
+        ),
     )
-    if detected_currency is not None:
-        out = out.withColumn("currency", F.coalesce(F.col("currency"), detected_currency))
-    out = out.filter(validity_predicate())
+
+
+def assemble_items(lines: DataFrame, attach_descriptions: bool = True) -> DataFrame:
+    """Classified lines → one row per menu item with category (rule 2),
+    description (rule 1/5), spice/dietary tags, raw prices.
+
+    One window exchange on doc_id + one co-partitioned aggregate on
+    (doc_id, item anchor) for the descriptions: the lines are read and
+    classified once, and the aggregate reuses the window's partitioning."""
+    return _run(lines, _assemble_steps(SparkContext._gateway, attach_descriptions))
+
+
+@functools.cache
+def _finalize_steps(jvm, currency_default: str) -> tuple:
     disp = F.coalesce(F.col("display_override"), price_display(currency_default))
-    return out.select(
-        "doc_id",
-        "item_name",
-        "category",
-        "subcategory",
-        "description",
-        disp.alias("price_display"),
-        "price",
-        "half_plate_price",
-        "full_plate_price",
-        "small_price",
-        "medium_price",
-        "large_price",
-        "currency",
-        "spice_level",
-        flatten_dietary_tags(F.col("dietary_tags")).alias("dietary_tags"),
-        primary_price().alias("primary_price"),
+    return (
+        lambda df: df.withColumns({
+            "item_name": clean_item_name(F.col("item_name")),
+            "currency": normalize_currency(F.col("currency_symbol")),
+        }),
+        _where(validity_predicate()),
+        _select(
+            *[F.col(c) for c in ("doc_id", "item_name", "category", "subcategory", "description")],
+            disp.alias("price_display"),
+            *[F.col(c) for c in ("price", "half_plate_price", "full_plate_price", "small_price",
+                                 "medium_price", "large_price", "currency", "spice_level")],
+            flatten_dietary_tags(F.col("dietary_tags")).alias("dietary_tags"),
+            primary_price().alias("primary_price"),
+        ),
     )
+
+
+def finalize_items(items: DataFrame, currency_default: str = "$") -> DataFrame:
+    """Raw parsed items → validated 13-column output table (P2 filter,
+    F2/F3/F5/F6/F7 derivations; menu_models.py:177-221)."""
+    return _run(items, _finalize_steps(SparkContext._gateway, currency_default))
 
 
 def parse_menu_documents(docs: DataFrame, doc_id: str = "doc_id", text: str = "text",
@@ -319,9 +314,10 @@ def parse_menu_documents(docs: DataFrame, doc_id: str = "doc_id", text: str = "t
                          attach_descriptions: bool = True) -> DataFrame:
     """End-to-end: documents(doc_id, text) → validated item table.
 
-    Distributed shape: narrow ops + one window shuffle on doc_id + one
-    description agg — linear in corpus size, no driver-side loops; at 100 TB
-    the doc_id partitioning carries every stage.
+    Distributed shape: narrow ops + one window exchange on doc_id + one
+    co-partitioned aggregate for descriptions — one read of the input,
+    linear in corpus size, nothing collected to Python; at 100 TB the doc_id
+    partitioning carries every stage.
     """
     from restaurant_etl_spark.session import fan_out
 
@@ -329,8 +325,7 @@ def parse_menu_documents(docs: DataFrame, doc_id: str = "doc_id", text: str = "t
     # AQE's byte-based coalescing would happily run it one-core on small
     # inputs, so pin the parse at full width
     lines = split_lines(fan_out(docs, doc_id), doc_id, text)
-    items = assemble_items(lines, attach_descriptions)
-    return finalize_items(items, currency_default)
+    return finalize_items(assemble_items(lines, attach_descriptions), currency_default)
 
 
 def document_metadata(items: DataFrame) -> DataFrame:

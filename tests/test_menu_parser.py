@@ -144,11 +144,65 @@ def test_price_display_no_price_fallback(spark):
 
 
 def test_parser_plan_is_window_based_no_cartesian(spark):
-    """Scale check: the parse plan must be narrow ops + one window shuffle on
-    doc_id — no cartesian/nested-loop joins anywhere."""
+    """Scale check: the parse plan is narrow ops + one window exchange on
+    doc_id, whose partitioning the description aggregate reuses — one read
+    of the input, no join of any kind."""
     docs = spark.createDataFrame([(i, MENU) for i in range(10)], "doc_id int, text string")
     plan = parse_menu_documents(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+    assert "Join" not in plan and "CartesianProduct" not in plan
+    assert plan.count("ENSURE_REQUIREMENTS") == 1
+    assert plan.count("Scan ExistingRDD") == 1
+    assert plan.count("Window [") == 1
+
+
+def test_each_line_regex_runs_once(spark):
+    """Every per-line regex appears once in the optimized plan: the header
+    flag feeds the subheader test, and the spice/tag blob is built once with
+    one spice extraction. PRICE_RANGE and MP_RE each have two distinct uses
+    (detect, then strip from the name)."""
+    from restaurant_etl_spark.operators import menu_parser as mp
+
+    docs = spark.createDataFrame([(1, MENU)], "doc_id int, text string")
+    plan = parse_menu_documents(docs)._jdf.queryExecution().optimizedPlan().toString()
+    once = (mp.HEADER_RE, mp.SUBHEADER_RE, mp.PRICE_TAIL, mp.TAG_SUFFIX_RE, mp.SPICE_RE)
+    assert [plan.count(p) for p in once] == [1] * len(once)
+    assert plan.count(mp.PRICE_RANGE) == 2 and plan.count(mp.MP_RE) == 2
+    assert plan.count("concat_ws( , ") == 1
+
+
+def test_parser_expressions_built_once_per_jvm(spark):
+    """Different input frames share one cached build of the parser's
+    expressions; only a new (attach_descriptions, currency_default) builds
+    another one."""
+    from restaurant_etl_spark.operators import menu_parser as mp
+
+    builders = (mp._split_steps, mp._assemble_steps, mp._finalize_steps)
+    small = spark.createDataFrame([(1, "Tea $3.00", "x")], "doc_id int, text string, note string")
+    parse_menu_documents(small).collect()
+    misses = [b.cache_info().misses for b in builders]
+
+    wide = spark.createDataFrame(
+        [(2**40, "SOUPS\nDal 4.00/6.00\nthick and spicy", 1.5, "y")],
+        "doc_id bigint, text string, weight double, note string",
+    )
+    rows = parse_menu_documents(wide).collect()
+    assert [b.cache_info().misses for b in builders] == misses
+    assert [(r["doc_id"], r["item_name"], r["category"], r["description"], r["spice_level"],
+             r["price_display"]) for r in rows] == [
+        (2**40, "Dal", "Soups", "thick and spicy", "Spicy", "Half: $4.00 | Full: $6.00")
+    ]
+
+    rupees = parse_menu_documents(wide, currency_default="₹").collect()
+    assert [r["price_display"] for r in rupees] == ["Half: ₹4.00 | Full: ₹6.00"]
+    assert [b.cache_info().misses for b in builders] == [misses[0], misses[1], misses[2] + 1]
+
+    # menu_category_summary's path: no description aggregate, null descriptions
+    bare = parse_menu_documents(wide, attach_descriptions=False).collect()
+    assert [(r["item_name"], r["category"], r["description"], r["spice_level"]) for r in bare] == [
+        ("Dal", "Soups", None, None)
+    ]
+    bare_plan = parse_menu_documents(wide, attach_descriptions=False)._jdf.queryExecution()
+    assert "Aggregate" not in bare_plan.executedPlan().toString()
 
 
 SUBMENU = """APPETIZERS

@@ -76,10 +76,13 @@ def test_topk_cosine_broadcasts_queries(spark, sf_dir):
 
 
 def test_menu_parser_single_window_shuffle(spark, sf_dir):
-    """The rule parser must stay narrow + one window partitioning on doc_id
-    (plus the small description-agg exchange) — no joins that explode."""
+    """The rule parser stays narrow + one window exchange on doc_id; the
+    description aggregate reuses that partitioning, so ``part`` is scanned
+    once and no join of any kind appears."""
     plan = _plan(spark, sf_dir, "menu_parse_items")
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+    assert "Join" not in plan and "CartesianProduct" not in plan
+    assert plan.count("ENSURE_REQUIREMENTS") == 1
+    assert plan.count("FileScan parquet") == 1
 
 
 def test_tfidf_vocabulary_join_unhinted(spark, sf_dir):
