@@ -4,7 +4,8 @@ capabilities of the Restaurant-ETL reference (see SURVEY.md).
 Layout:
     session.py    SparkSession factory tuned for both local[32] tests and
                   large-cluster execution (AQE, broadcast, partition sizing).
-    schemas.py    canonical StructTypes (menu item table, extraction result).
+    schemas.py    the menu-item contract: 13-column output order, currency
+                  whitelist, price bounds and price-column order.
     sources/      table loaders, binaryFile ingestion + format routing,
                   pluggable document extractors, sinks.
     functions/    native Column function library (cleaning, text, vectors).

@@ -109,12 +109,6 @@ def flatten_dietary_tags(tags: Column) -> Column:
     return F.when(tags.isNotNull() & (F.size(tags) > 0), F.array_join(tags, ", "))
 
 
-def coalesce_currency(detected: Column) -> Column:
-    """F8 — item currency else document-level detected currency
-    (menu_models.py:194)."""
-    return F.coalesce(F.col("currency"), detected)
-
-
 def restaurant_name_from_path(path: Column) -> Column:
     """F9 — file stem → underscores to spaces → Title Case
     (process_menu.py:43)."""

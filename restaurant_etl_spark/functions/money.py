@@ -227,8 +227,3 @@ def avg_on_grid_from_cents(sum_col: str, n_col: str, d: int, alias: str) -> Colu
 
 SQL_PRICE = f"CAST(l_extendedprice AS {PRICE_DEC})"
 SQL_DISC_PRICE = f"{SQL_PRICE} * CAST(1 - l_discount AS {FRAC_DEC})"
-SQL_CHARGE = f"({SQL_DISC_PRICE}) * CAST(1 + l_tax AS {FRAC_DEC})"
-
-
-def sql_sum_money(expr: str, alias: str, scale: int = 2) -> str:
-    return f"CAST(round(sum({expr}), {scale}) AS DOUBLE) AS {alias}"

@@ -190,7 +190,7 @@ def _staged_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominated the cold ledger's per-call construction column. Keyed on
     the documents table's file fingerprint, so a rewritten corpus under
     the same path rebuilds (see staging.staged)."""
-    from restaurant_etl_spark.operators.staging import staged
+    from restaurant_etl_spark.sources.staging import staged
 
     return staged(
         spark, sf_dir, "documents", "shingle_arrays",
@@ -204,7 +204,7 @@ def _staged_common(spark: SparkSession, sf_dir: str, sa: DataFrame) -> DataFrame
     recall report and the source-overlap matrix all consume the SAME
     (doc_a, doc_b, n_common) frame — pair-count-sized, the cheapest of
     the shared artifacts to keep."""
-    from restaurant_etl_spark.operators.staging import staged
+    from restaurant_etl_spark.sources.staging import staged
 
     return staged(
         spark, sf_dir, "documents", "common_counts",
@@ -995,7 +995,7 @@ def decontamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return sh.join(rare, "shingle")
 
-    from restaurant_etl_spark.operators.staging import staged
+    from restaurant_etl_spark.sources.staging import staged
 
     idx = staged(spark, sf_dir, "documents", "decon_capped_postings", _build_idx)
     bench = idx.filter(F.col("doc_id") % BENCH_MOD == 0).select(
@@ -1276,7 +1276,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the index's OTHER half — the same pre-built artifact — and re-deriving
     # them per execution re-ran the full corpus explode + DF aggregation
     # twice per run; staged under the same key family.
-    from restaurant_etl_spark.operators.staging import staged
+    from restaurant_etl_spark.sources.staging import staged
 
     com_rare = staged(
         spark, sf_dir, "documents", "incremental_com_rare", _build_com_rare

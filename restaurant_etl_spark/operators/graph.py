@@ -152,7 +152,7 @@ def _scaled_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~60M rows at sf10) instead of a join over the materialized edge
     table (O(Σ sz²) ≈ 200M+ rows at sf10, the old localCheckpoint).
     The loop invariant that gets materialized once is now item-sized."""
-    from restaurant_etl_spark.operators.staging import staged
+    from restaurant_etl_spark.sources.staging import staged
 
     def _build_items() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem")

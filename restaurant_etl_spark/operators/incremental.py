@@ -167,7 +167,8 @@ def menu_incremental_first_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     the delta behavior (second tick = 0 files) is covered by
     tests/test_incremental.py."""
     from restaurant_etl_spark.operators.menu import _stage_menu_txt
-    from restaurant_etl_spark.sources.staging import source_fingerprint, stage_once
+    from restaurant_etl_spark.sources.staging import stage_once
+    from restaurant_etl_spark.sources.tables import table_fingerprint
 
     stage = _stage_menu_txt(spark, sf_dir)
 
@@ -176,7 +177,7 @@ def menu_incremental_first_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     state = stage_once(
         f"incr_state_{os.path.basename(os.path.normpath(sf_dir))}",
-        source_fingerprint(os.path.join(sf_dir, "part.parquet")),
+        table_fingerprint(sf_dir, "part"),
         build,
     )
     items = spark.read.parquet(os.path.join(state, "items"))

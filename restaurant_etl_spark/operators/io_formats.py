@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 
 from restaurant_etl_spark.functions.money import sum_money_grid
 from restaurant_etl_spark.operators.registry import register
-from restaurant_etl_spark.sources.staging import source_fingerprint, stage_once
-from restaurant_etl_spark.sources.tables import load_table
+from restaurant_etl_spark.sources.staging import stage_once
+from restaurant_etl_spark.sources.tables import load_table, table_fingerprint
 
 
 def _stage(spark: SparkSession, sf_dir: str, table: str, fmt: str) -> str:
@@ -30,7 +30,7 @@ def _stage(spark: SparkSession, sf_dir: str, table: str, fmt: str) -> str:
 
     base = stage_once(
         f"io_{fmt}_{table}_{os.path.basename(os.path.normpath(sf_dir))}",
-        source_fingerprint(os.path.join(sf_dir, f"{table}.parquet")),
+        table_fingerprint(sf_dir, table),
         build,
     )
     return os.path.join(base, "data")
@@ -122,7 +122,7 @@ def source_partitioned_pruned_read(spark: SparkSession, sf_dir: str) -> DataFram
 
     base = stage_once(
         f"io_part_orders_{os.path.basename(os.path.normpath(sf_dir))}",
-        source_fingerprint(os.path.join(sf_dir, "orders.parquet")),
+        table_fingerprint(sf_dir, "orders"),
         build,
     )
     back = spark.read.parquet(os.path.join(base, "data"))

@@ -43,10 +43,8 @@ def _stage_menu_txt(spark: SparkSession, sf_dir: str, with_bad: bool = False) ->
     operator path."""
     import os as _os
 
-    from restaurant_etl_spark.sources.staging import (
-        source_fingerprint,
-        stage_once,
-    )
+    from restaurant_etl_spark.sources.staging import stage_once
+    from restaurant_etl_spark.sources.tables import table_fingerprint
 
     def build(scratch: str) -> None:
         docs = _part_menu_docs(_t(spark, sf_dir, "part").filter(F.col("p_partkey") < 100))
@@ -60,7 +58,7 @@ def _stage_menu_txt(spark: SparkSession, sf_dir: str, with_bad: bool = False) ->
     suffix = "bad" if with_bad else "ok"
     return stage_once(
         f"menu_files_{suffix}_{_os.path.basename(_os.path.normpath(sf_dir))}",
-        source_fingerprint(_os.path.join(sf_dir, "part.parquet")),
+        table_fingerprint(sf_dir, "part"),
         build,
     )
 
@@ -270,15 +268,17 @@ def menu_pipeline_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_format,
     )
 
-    from restaurant_etl_spark.session import persist_scoped
+    from restaurant_etl_spark.sources.staging import staged
 
     stage = _stage_menu_txt(spark, sf_dir)
-    raw = with_format(read_binary_dir(spark, stage, glob="*.txt"))
-    # extract ONCE and persist: the Python extraction pass must not re-run
-    # per downstream consumer (the production shape materializes this
-    # stage to parquet; the scoped persist is its in-session analog)
-    extracted = persist_scoped(
-        extract_binary_text(raw), "menu_extracted_ok"
+    # extract ONCE per corpus: the Python extraction pass must not re-run
+    # per downstream consumer or per call. The stage dir is derived from
+    # ``part``, so ``part``'s fingerprint is the extraction's identity.
+    extracted = staged(
+        spark, sf_dir, "part", "menu_extracted_ok",
+        lambda: extract_binary_text(
+            with_format(read_binary_dir(spark, stage, glob="*.txt"))
+        ),
     ).filter(F.col("success"))
     docs = extracted.select(
         F.regexp_extract("path", r"([0-9]+)\.txt$", 1).cast("bigint").alias("doc_id"),
@@ -306,7 +306,8 @@ def _stage_menu_scans(spark: SparkSession, sf_dir: str) -> str:
     )
     from restaurant_etl_spark.sources.jpeg_codec import encode_jpeg
     from restaurant_etl_spark.sources.media_codecs import encode_png
-    from restaurant_etl_spark.sources.staging import source_fingerprint, stage_once
+    from restaurant_etl_spark.sources.staging import stage_once
+    from restaurant_etl_spark.sources.tables import table_fingerprint
 
     def build(scratch: str) -> None:
         docs = _part_menu_docs(_t(spark, sf_dir, "part").filter(F.col("p_partkey") < 40))
@@ -327,7 +328,7 @@ def _stage_menu_scans(spark: SparkSession, sf_dir: str) -> str:
     # (name, source fingerprint) only, so a layout change must change name
     return stage_once(
         f"menu_scans_v2_{_os.path.basename(_os.path.normpath(sf_dir))}",
-        source_fingerprint(_os.path.join(sf_dir, "part.parquet")),
+        table_fingerprint(sf_dir, "part"),
         build,
     )
 
@@ -457,14 +458,18 @@ def menu_batch_status_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_format,
     )
 
-    from restaurant_etl_spark.session import persist_scoped
+    from restaurant_etl_spark.sources.staging import staged
 
     # a separate stage including the planted unsupported file: staged dirs
     # are immutable once installed (no mutate-after-marker races)
     stage = _stage_menu_txt(spark, sf_dir, with_bad=True)
-    raw = with_format(read_binary_dir(spark, stage, glob="*.{txt,xyz}"))
     # three consumers (items parse, ok rollup, fail rollup) — extract once
-    extracted = persist_scoped(extract_binary_text(raw), "menu_extracted_all")
+    extracted = staged(
+        spark, sf_dir, "part", "menu_extracted_all",
+        lambda: extract_binary_text(
+            with_format(read_binary_dir(spark, stage, glob="*.{txt,xyz}"))
+        ),
+    )
     ok_docs = extracted.filter(F.col("success")).select(
         F.regexp_extract("path", r"([0-9]+)\.txt$", 1).cast("bigint").alias("doc_id"),
         "text",

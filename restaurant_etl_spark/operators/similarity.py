@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from restaurant_etl_spark.operators.registry import register
-from restaurant_etl_spark.sources.tables import load_table
+from restaurant_etl_spark.sources.tables import load_table, table_fingerprint, table_files
 
 DIM = 64
 TOP_K = 10
@@ -46,7 +46,7 @@ N_BANDS = 2
 BAND_BITS = N_BITS // N_BANDS
 
 
-#: corpus-identity fingerprint (file names + sizes + mtimes, ADVICE r9) →
+#: ``table_fingerprint(sf_dir, "embeddings")`` (ADVICE r9) →
 #: row count for corpora that already passed the data contract this
 #: process. Keyed on the FILES, not the sf_dir string: an in-process
 #: rewrite/append under the same path (the IVF maintenance pattern)
@@ -125,35 +125,6 @@ def _score_chunk(n_queries: int) -> int:
     )
 
 
-def _emb_files(sf_dir: str) -> list[str]:
-    """Data files of the embeddings table (single file or Spark-written
-    directory of part files), sorted for a stable fingerprint."""
-    import os
-
-    p = os.path.join(os.path.realpath(sf_dir), "embeddings.parquet")
-    if os.path.isdir(p):
-        return sorted(
-            os.path.join(p, f)
-            for f in os.listdir(p)
-            if f.endswith(".parquet") or f.startswith("part-")
-        )
-    return [p] if os.path.exists(p) else []
-
-
-def _emb_contract_key(sf_dir: str) -> str:
-    """Corpus-identity cache key: file names + sizes + mtimes (ADVICE
-    r9 — the bare sf_dir string let an in-process rewrite under the same
-    path skip revalidation and mis-size the repartition floor)."""
-    import hashlib
-    import os
-
-    parts = []
-    for f in _emb_files(sf_dir):
-        st = os.stat(f)
-        parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:16]
-
-
 def _emb_footer_evidence(sf_dir: str):
     """(n_rows, footer_proven) from parquet FOOTER statistics only — no
     data pages are read (VERDICT r9 #7: the contract check was a full
@@ -185,7 +156,7 @@ def _emb_footer_evidence(sf_dir: str):
 
     n = 0
     proven = True
-    for f in _emb_files(sf_dir):
+    for f in table_files(sf_dir, "embeddings"):
         md = pq.ParquetFile(f).metadata
         n += md.num_rows
         for rg in range(md.num_row_groups):
@@ -225,7 +196,7 @@ def _spot_check_dims(sf_dir: str, budget: int = _EMB_CONTRACT_SAMPLE):
     import pyarrow.parquet as pq
 
     rgs = []
-    for f in _emb_files(sf_dir):
+    for f in table_files(sf_dir, "embeddings"):
         md = pq.ParquetFile(f).metadata
         rgs.extend((f, i) for i in range(md.num_row_groups))
     if not rgs:
@@ -305,7 +276,7 @@ def _emb_n(spark: SparkSession, sf_dir: str) -> int:
     (file-fingerprint keyed) — split out of :func:`_emb` so consumers
     that size their own scan chunk (the q×n scoring paths) can read n
     without paying a second contract pass."""
-    key = _emb_contract_key(sf_dir)
+    key = table_fingerprint(sf_dir, "embeddings")
     if key not in _EMB_CONTRACT_OK:
         e = load_table(spark, sf_dir, "embeddings")
         _EMB_CONTRACT_OK[key] = _emb_contract_check(e, sf_dir)
@@ -1022,11 +993,6 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF with data-derived sqrt(n) centroids — the production-shaped variant
 # --------------------------------------------------------------------------
 
-_DUCK_COS = (
-    f"round({_DUCK_DOT_L.format(a='{a}', b='{b}')}"
-    f" / ({_DUCK_NORM_L.format(a='{a}')} * {_DUCK_NORM_L.format(a='{b}')}), 4)"
-)
-
 #: Lloyd refinement rounds for the sqrt(n)-cell IVF (VERDICT r3 #7).
 LLOYD_ROUNDS = 2
 
@@ -1175,25 +1141,6 @@ _IVF_INDEX_DEFAULT = "/tmp/spark_graft_index_cache"
 _IVF_INDEX_VERSION = "2"
 
 
-def _corpus_fingerprint(sf_dir: str) -> str:
-    """Cheap corpus identity for index keying: embeddings file names +
-    sizes + mtimes (a catalog snapshot id in production — never a data
-    scan). Includes the index algorithm version and its constants."""
-    import hashlib
-    import os
-
-    p = os.path.join(os.path.realpath(sf_dir), "embeddings.parquet")
-    parts = [p, _IVF_INDEX_VERSION, f"lloyd={LLOYD_ROUNDS}", f"dim={DIM}"]
-    if os.path.isdir(p):
-        for f in sorted(os.listdir(p)):
-            st = os.stat(os.path.join(p, f))
-            parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(p):
-        st = os.stat(p)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:16]
-
-
 def _write_ivf_meta(idx_dir: str, meta: dict) -> None:
     import json
     import os
@@ -1231,12 +1178,12 @@ def _ivf_sqrtn_index(spark: SparkSession, sf_dir: str):
     build. This is the production serve shape: the index is a table,
     build is maintenance, queries are reads.
 
-    Atomicity: built under a pid-suffixed tmp dir, promoted with one
-    os.rename; a concurrent builder losing the race just reads the
-    winner's artifact. Unwritable cache → in-session build (degraded but
-    correct). The inverted file is written sorted by c_cell so parquet
-    row groups cluster by cell (zone-map prunable on cell-targeted
-    maintenance reads)."""
+    Atomicity: built and promoted by ``sources.staging.stage_dir``; a
+    concurrent builder losing the race just reads the winner's artifact.
+    Unwritable cache → in-session build (degraded but correct). The
+    inverted file is written sorted by c_cell so parquet row groups
+    cluster by cell (zone-map prunable on cell-targeted maintenance
+    reads)."""
     idx_dir, fallback = _ensure_ivf_index(spark, sf_dir)
     if idx_dir is not None:
         return ivf_read_index(spark, idx_dir)
@@ -1256,52 +1203,39 @@ def _ensure_ivf_index(spark: SparkSession, sf_dir: str):
     promoted, else ``(None, (cent, assign))`` with in-session frames
     (unwritable cache)."""
     import os
-    import shutil
 
-    cache_root = os.environ.get(_IVF_INDEX_ENV, _IVF_INDEX_DEFAULT)
-    idx_dir = os.path.join(cache_root, f"ivf_sqrtn_{_corpus_fingerprint(sf_dir)}")
-    if os.path.isdir(idx_dir):
-        return idx_dir, None
+    from restaurant_etl_spark.sources.staging import stage_dir
 
-    cent, assign = _ivf_sqrtn_build(spark, sf_dir)
-    try:
-        tmp = _private_build_dir(idx_dir)
+    fp = table_fingerprint(
+        sf_dir, "embeddings", _IVF_INDEX_VERSION, f"lloyd={LLOYD_ROUNDS}", f"dim={DIM}"
+    )
+    idx_dir = os.path.join(
+        os.environ.get(_IVF_INDEX_ENV, _IVF_INDEX_DEFAULT), f"ivf_sqrtn_{fp}"
+    )
+    built = []
+
+    def build(tmp: str) -> None:
+        built.append(_ivf_sqrtn_build(spark, sf_dir))
+        cent, assign = built[0]
         cent.write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
         assign.sortWithinPartitions("c_cell").write.mode("overwrite").parquet(
             os.path.join(tmp, "inverted")
         )
         n = spark.read.parquet(os.path.join(tmp, "inverted")).count()
         _write_ivf_meta(tmp, {"rows": n, "built_rows": n})
-        try:
-            os.rename(tmp, idx_dir)
-        except OSError:  # lost the build race — serve the winner's index
-            shutil.rmtree(tmp, ignore_errors=True)
-        return idx_dir, None
+
+    try:
+        return stage_dir(idx_dir, build), None
     except Exception:  # cache unwritable: in-session index, still correct
+        # (a build that failed before writing, e.g. on the data contract,
+        # fails again here, loudly)
+        cent, assign = built[0] if built else _ivf_sqrtn_build(spark, sf_dir)
         return None, (cent.localCheckpoint(eager=True), assign.localCheckpoint(eager=True))
 
 
 #: appended-since-build fraction beyond which an append triggers a full
 #: Lloyd rebuild instead (centroid drift: cells sized for the old corpus)
 IVF_REBUILD_FRACTION = 0.3
-
-
-def _private_build_dir(final_dir: str) -> str:
-    """Per-CALL private staging dir for the build→rename promotion
-    (VERDICT r8 #6). Keying the suffix on pid alone let two writers IN
-    THE SAME PROCESS (threads, or two maintenance jobs sharing a Spark
-    driver) stage into ONE tmp dir and promote a torn mix of both
-    builds; a uuid per call gives every writer its own staging area, so
-    the only shared step is the atomic ``os.rename`` — the loser gets
-    ENOTEMPTY and serves the winner's artifact. Readers only ever see
-    the final path, which appears fully formed or not at all
-    (rename atomicity); proven by tests/test_ivf_incremental.py's
-    two-writer and reader-mid-promotion tests, mirroring the CDC
-    compaction ledger contract."""
-    import os
-    import uuid
-
-    return f"{final_dir}.build.{os.getpid()}.{uuid.uuid4().hex[:8]}"
 
 
 def _link_or_copy_tree(src: str, dst: str) -> None:
@@ -1347,7 +1281,8 @@ def ivf_append_batch(
     batch id; re-applying the same tag returns the existing artifact
     (idempotent maintenance, like the CDC ledger)."""
     import os
-    import shutil
+
+    from restaurant_etl_spark.sources.staging import stage_dir
 
     cols = batch.columns
     b = (
@@ -1355,32 +1290,27 @@ def ivf_append_batch(
         if "embedding" in cols
         else batch.select("vec_id", "v")
     )
-    new_dir = f"{index_dir}+{tag}"
-    if os.path.isdir(new_dir):
-        return new_dir, _read_ivf_meta(new_dir).get("last_append_rebuilt", False)
 
-    inv_p = os.path.join(index_dir, "inverted")
-    meta = _read_ivf_meta(index_dir)
-    base_rows = meta.get("rows") or spark.read.parquet(inv_p).count()
-    built_rows = meta.get("built_rows") or base_rows
-    m = b.count()
-    tmp = _private_build_dir(new_dir)
-
-    rebuilt = (base_rows + m - built_rows) / built_rows > IVF_REBUILD_FRACTION
-    if rebuilt:
-        e_all = (
-            spark.read.parquet(inv_p)
-            .select("vec_id", F.col("cv_v").alias("v"))
-            .unionByName(b)
-        )
-        cent2, assign2 = _ivf_build_from(e_all)
-        cent2.write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
-        assign2.sortWithinPartitions("c_cell").write.mode("overwrite").parquet(
-            os.path.join(tmp, "inverted")
-        )
-        _write_ivf_meta(tmp, {"rows": base_rows + m, "built_rows": base_rows + m,
-                              "last_append_rebuilt": True})
-    else:
+    def build(tmp: str) -> None:
+        inv_p = os.path.join(index_dir, "inverted")
+        meta = _read_ivf_meta(index_dir)
+        base_rows = meta.get("rows") or spark.read.parquet(inv_p).count()
+        built_rows = meta.get("built_rows") or base_rows
+        m = b.count()
+        if (base_rows + m - built_rows) / built_rows > IVF_REBUILD_FRACTION:
+            e_all = (
+                spark.read.parquet(inv_p)
+                .select("vec_id", F.col("cv_v").alias("v"))
+                .unionByName(b)
+            )
+            cent2, assign2 = _ivf_build_from(e_all)
+            cent2.write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
+            assign2.sortWithinPartitions("c_cell").write.mode("overwrite").parquet(
+                os.path.join(tmp, "inverted")
+            )
+            _write_ivf_meta(tmp, {"rows": base_rows + m, "built_rows": base_rows + m,
+                                  "last_append_rebuilt": True})
+            return
         cent = spark.read.parquet(os.path.join(index_dir, "centroids"))
         sa = b.crossJoin(F.broadcast(cent)).select(
             "vec_id", "v", "c_cell",
@@ -1398,11 +1328,11 @@ def ivf_append_batch(
         assign_b.write.mode("append").parquet(os.path.join(tmp, "inverted"))
         _write_ivf_meta(tmp, {"rows": base_rows + m, "built_rows": built_rows,
                               "last_append_rebuilt": False})
-    try:
-        os.rename(tmp, new_dir)
-    except OSError:  # concurrent maintenance with the same tag — serve winner
-        shutil.rmtree(tmp, ignore_errors=True)
-    return new_dir, rebuilt
+
+    # a concurrent writer of the same tag may win the promotion: report
+    # what the promoted artifact did, not what this call built
+    new_dir = stage_dir(f"{index_dir}+{tag}", build)
+    return new_dir, _read_ivf_meta(new_dir).get("last_append_rebuilt", False)
 
 
 @register(

@@ -1,4 +1,5 @@
-"""Canonical schemas — the single StructType source of truth replacing the
+"""Canonical menu-item contract — the output column order, currency
+whitelist, price bounds and price-column preference that replace the
 reference's three-layer schema stack (JSON Schema at
 restaurant_etl/parsers/llm_parser.py:26-57, pydantic at
 restaurant_etl/models/menu_models.py:6-62, column-order projection at
@@ -6,47 +7,6 @@ menu_models.py:202-219).
 """
 
 from __future__ import annotations
-
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-#: MenuItem record (menu_models.py:6-62). All prices double — the reference
-#: uses Python floats throughout, no decimal type anywhere.
-MENU_ITEM_SCHEMA = StructType(
-    [
-        StructField("item_name", StringType(), nullable=False),
-        StructField("category", StringType()),
-        StructField("description", StringType()),
-        StructField("price", DoubleType()),
-        StructField("half_plate_price", DoubleType()),
-        StructField("full_plate_price", DoubleType()),
-        StructField("small_price", DoubleType()),
-        StructField("medium_price", DoubleType()),
-        StructField("large_price", DoubleType()),
-        StructField("currency", StringType()),
-        StructField("spice_level", StringType()),
-        StructField("dietary_tags", ArrayType(StringType())),
-    ]
-)
-
-#: Extraction result row (pdf_extractor.py:60-66, image_extractor.py:40-57).
-EXTRACTION_RESULT_SCHEMA = StructType(
-    [
-        StructField("text", StringType()),
-        StructField("source_file", StringType()),
-        StructField("extraction_method", StringType()),
-        StructField("char_count", IntegerType()),
-        StructField("success", BooleanType()),
-        StructField("error", StringType()),
-    ]
-)
 
 #: The 13-column output CSV contract, exact order
 #: (menu_models.py:202-216, output/great_india.csv:1).

@@ -169,24 +169,3 @@ def fan_out(df, *keys: str):
         return df
     return df.repartition(target, *[df[k] for k in keys]) if keys else df.repartition(target)
 
-
-#: per-key cache of the ONE DataFrame each call site keeps persisted
-_SCOPED: dict[str, object] = {}
-
-
-def persist_scoped(df, key: str):
-    """Persist ``df``, releasing whatever was previously persisted under
-    ``key``.
-
-    Registered queries return unmaterialized plans, so a query that feeds
-    one expensive intermediate (a shingle table, an extraction pass) to
-    several consumers can't unpersist at the right moment itself. Scoping
-    the cache to "latest invocation per call site" bounds cached blocks to
-    one table per site instead of leaking one per invocation across a
-    long-lived session (driver runs + bench loops)."""
-    old = _SCOPED.pop(key, None)
-    if old is not None:
-        old.unpersist(blocking=False)
-    df.persist()
-    _SCOPED[key] = df
-    return df

@@ -1,9 +1,9 @@
-"""Sinks S7-S8 (SURVEY.md §2A): the 13-column CSV contract and debug JSON.
+"""Sink S7 (SURVEY.md §2A): the 13-column CSV contract.
 
 The reference writes one CSV per document via pandas (process_menu.py:91-93,
 header row per output/great_india.csv:1); ``coalesce(1)`` reproduces the
 single-file contract (serializing only the final write — upstream stages
-stay parallel). Parquet is the scale-path sink: partitioned, parallel.
+stay parallel).
 """
 
 from __future__ import annotations
@@ -61,17 +61,3 @@ def write_menu_csv(items: DataFrame, path: str, single_file: bool = True) -> Non
     if single_file:
         out = out.coalesce(1)
     out.write.option("header", True).mode("overwrite").csv(path)
-
-
-def write_debug_json(df: DataFrame, path: str) -> None:
-    """S8 — raw-parse debug sink (llm_parser.py:162-164), parallel JSON."""
-    df.write.mode("overwrite").json(path)
-
-
-def write_items_parquet(items: DataFrame, path: str, partition_by: tuple[str, ...] = ()) -> None:
-    """Scale-path sink: parquet, optionally partitioned (e.g. by category
-    or ingest date) for downstream partition pruning."""
-    w = items.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)

@@ -1,70 +1,169 @@
-"""Atomic, fingerprint-keyed temp-dir staging for fixture inputs.
+"""The one staging layer: artifacts derived from a source table, built once
+and reused for as long as the table's files are unchanged.
 
-Several queries stage derived inputs under the system temp dir (menu .txt
-files for the binaryFile source, micros-timestamp events for the stream
-reader, CSV/JSON round-trip files). /tmp is SHARED between concurrent
-pytest, bench, and driver runs, so staging must be:
+One key. Every tier is keyed on
+:func:`restaurant_etl_spark.sources.tables.table_fingerprint` (names, sizes
+and mtimes of the table's data files, plus an optional salt), so a table
+rewritten under the same path — the incremental-ingest and IVF-maintenance
+pattern — changes the key and forces a rebuild; a stale artifact is never
+served for new data.
 
-  * atomic — build into a unique scratch dir, then ``os.rename`` into the
-    final path: readers either see a complete directory or none at all,
-    never a half-written one (two concurrent stagers both build; one wins
-    the rename, the loser's scratch is discarded);
-  * staleness-proof — the final dir name embeds a fingerprint of the
-    SOURCE file (mtime + size), so regenerated testdata gets a fresh stage
-    instead of silently reusing the old one.
+Two tiers:
+
+* **In-process** — :func:`staged` returns an eagerly localCheckpointed frame,
+  built once per (SparkContext, corpus dir, table fingerprint, label) and
+  shared by every sibling query over the same corpus (shingle arrays,
+  pagerank invariants, the menu extraction pass). A cache hit returns the
+  same rows the builder would have produced, so oracle hashes cannot move.
+  Entries are bounded: the context id scopes them to the JVM that owns the
+  checkpoint blocks (entries of a stopped context are dropped on every
+  call), and a rewrite under the same corpus dir explicitly unpersists the
+  superseded frame's blocks (``_release``) instead of pinning them until
+  JVM exit. The key includes ``realpath(sf_dir)``, so two corpora staging
+  the same (table, label) coexist instead of evicting each other.
+
+* **On disk** — :func:`stage_dir` builds a directory at a final path
+  exactly once and promotes it atomically: ``build`` writes into a private
+  sibling scratch dir (``{final}.build.{pid}.{uuid8}`` — a sibling, because
+  a rename across filesystems fails; per call, because two writers in one
+  process must never share a scratch dir), ``_STAGED_OK`` is written into
+  it, and one ``os.rename`` publishes it. Readers see the final path fully
+  formed or not at all; of two concurrent stagers one wins the rename and
+  the loser's scratch is discarded. A final dir without the marker (a
+  crashed or legacy run) is moved aside and replaced. :func:`stage_once`
+  places such a dir under the system temp dir for query fixtures (menu
+  files, round-trip CSV/JSON/ORC, stream sources, incremental state); the
+  persisted IVF index passes its own final path.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 import tempfile
+import uuid
 from collections.abc import Callable
 
+from pyspark.sql import DataFrame, SparkSession
 
-def source_fingerprint(*paths: str) -> str:
-    """Cheap content key for staging dirs: (path, mtime_ns, size) per
-    source file, hashed. Changes whenever the testdata is regenerated."""
-    h = hashlib.md5()
-    for p in paths:
-        st = os.stat(p)
-        h.update(f"{p}|{st.st_mtime_ns}|{st.st_size}".encode())
-    return h.hexdigest()[:10]
+from restaurant_etl_spark.sources.tables import table_fingerprint
+
+_STAGED: dict[tuple, DataFrame] = {}
+
+# regression guard (VERDICT r11 #6): builds per (corpus dir, table,
+# label) this process — a refactor that quietly stops sharing the staged
+# artifact shows up here as a count > 1 per corpus, long before the sf10
+# cold ledger would catch it. Reset by ``clear_staged`` (VERDICT r12 #7)
+# so the dict is bounded by the live cache's corpora, not process history.
+_BUILD_COUNTS: dict[tuple[str, str, str], int] = {}
+
+_MARKER = "_STAGED_OK"
 
 
-def stage_once(name: str, fingerprint: str, build: Callable[[str], None]) -> str:
-    """Return a directory named ``{tmp}/{name}_{fingerprint}`` whose
-    contents were produced by ``build(scratch_dir)`` exactly once.
+def _release(df: DataFrame) -> None:
+    """Best-effort explicit unpersist of a staged frame's checkpoint
+    blocks. ``localCheckpoint`` persists the physical RDD and returns a
+    frame whose analyzed plan is a LogicalRDD over exactly that RDD, so
+    unpersist it directly; if the internal shape ever moves, fall back to
+    dropping the reference (Spark's ContextCleaner then releases the
+    blocks on GC — correct, just later)."""
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:
+        pass
 
-    ``build`` runs against a private scratch dir which is atomically
-    renamed into the final path on success; a completed stage is marked by
-    ``_STAGED_OK`` written BEFORE the rename (so the marker can never be
-    observed on a partial directory)."""
-    base = os.path.join(tempfile.gettempdir(), f"{name}_{fingerprint}")
-    marker = os.path.join(base, "_STAGED_OK")
+
+def staged(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    label: str,
+    build: Callable[[], DataFrame],
+) -> DataFrame:
+    """Return the staged artifact ``label`` for ``table`` at ``sf_dir``,
+    building + eagerly localCheckpointing it on first use in this
+    process/context and reusing the checkpointed frame afterwards.
+
+    Superseded entries (same table+label, older fingerprint) and entries
+    owned by stopped contexts are evicted here, so the cache holds at
+    most one live frame per (corpus, label)."""
+    app_id = spark.sparkContext.applicationId
+    # entries from a stopped context: blocks died with the JVM-side
+    # context; drop the dead references so the dict stays bounded
+    for k in [k for k in _STAGED if k[0] != app_id]:
+        del _STAGED[k]
+    sf_real = os.path.realpath(sf_dir)
+    fp = table_fingerprint(sf_dir, table)
+    key = (app_id, sf_real, table, fp, label)
+    df = _STAGED.get(key)
+    if df is None:
+        # unpersist-on-supersede: a rewritten corpus under the SAME
+        # directory changed the fingerprint — release the old frame's
+        # checkpoint blocks now instead of pinning them until JVM exit.
+        # Scoped to this sf_dir (ADVICE r12): other corpora's live
+        # entries for the same (table, label) are left alone.
+        for k in [
+            k
+            for k in _STAGED
+            if k[0] == app_id
+            and k[1] == sf_real
+            and k[2] == table
+            and k[4] == label
+            and k[3] != fp
+        ]:
+            _release(_STAGED.pop(k))
+        df = build().localCheckpoint()
+        _STAGED[key] = df
+        bk = (sf_real, table, label)
+        _BUILD_COUNTS[bk] = _BUILD_COUNTS.get(bk, 0) + 1
+    return df
+
+
+def clear_staged() -> None:
+    """Drop every cache entry, explicitly unpersisting each frame's
+    checkpoint blocks, and reset the build-count guard (tests and
+    long-lived sessions)."""
+    while _STAGED:
+        _release(_STAGED.popitem()[1])
+    _BUILD_COUNTS.clear()
+
+
+def stage_dir(final: str, build: Callable[[str], None]) -> str:
+    """Return ``final``, a directory whose contents were produced by
+    ``build(scratch_dir)`` exactly once, promoted atomically (see the
+    module docstring). Creates ``final``'s parent when missing; raises
+    ``OSError`` when it cannot be created or written."""
+    marker = os.path.join(final, _MARKER)
     if os.path.exists(marker):
-        return base
+        return final
 
-    scratch = tempfile.mkdtemp(prefix=f".{name}.", dir=tempfile.gettempdir())
+    os.makedirs(os.path.dirname(final), exist_ok=True)
+    scratch = f"{final}.build.{os.getpid()}.{uuid.uuid4().hex[:8]}"
+    os.mkdir(scratch)
     try:
         build(scratch)
-        open(os.path.join(scratch, "_STAGED_OK"), "w").close()
+        open(os.path.join(scratch, _MARKER), "w").close()
         for _ in range(3):
             try:
-                os.rename(scratch, base)
+                os.rename(scratch, final)
                 break
             except OSError:
                 if os.path.exists(marker):
                     break  # a concurrent stager finished first; ours is redundant
-                # base exists but was never completed (legacy or crashed
+                # final exists but was never completed (legacy or crashed
                 # run): move it aside and retry the install
-                stale = tempfile.mkdtemp(prefix=".stale.", dir=tempfile.gettempdir())
+                stale = f"{final}.stale.{os.getpid()}.{uuid.uuid4().hex[:8]}"
                 try:
-                    os.rename(base, os.path.join(stale, "old"))
+                    os.rename(final, stale)
                 except OSError:
                     pass  # someone else already moved it; retry
                 shutil.rmtree(stale, ignore_errors=True)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
-    return base
+    return final
+
+
+def stage_once(name: str, fingerprint: str, build: Callable[[str], None]) -> str:
+    """:func:`stage_dir` at ``{tmp}/{name}_{fingerprint}``, for fixture
+    inputs derived from a source table."""
+    return stage_dir(os.path.join(tempfile.gettempdir(), f"{name}_{fingerprint}"), build)

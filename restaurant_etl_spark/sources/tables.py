@@ -3,10 +3,16 @@
 Parquet scans are the canonical input path: columnar, predicate-pushdown and
 column-pruning friendly. Nothing here collects or caches — callers compose
 lazily so Catalyst sees the whole plan.
+
+A table lives at ``{sf_dir}/{name}.parquet``: one file, or a Spark-written
+directory of part files. :func:`table_files` is the one place that knows this
+layout, and :func:`table_fingerprint` is the one corpus-identity key every
+staged artifact, persisted index and contract memo is keyed on.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,12 +30,6 @@ TABLES = (
     "embeddings",
 )
 
-#: dimension tables small enough to broadcast at any scale factor —
-#: region/nation are bounded by geography (25/5 rows in TPC-H) regardless of SF.
-BROADCAST_DIMS = ("region", "nation")
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
@@ -42,6 +42,32 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return _load_events(spark, path)
     return spark.read.parquet(path)
+
+
+def table_files(sf_dir: str, table: str) -> list[str]:
+    """Data files behind ``table`` at ``sf_dir`` (the single parquet file,
+    or every part file of a directory table), sorted for a stable key."""
+    p = os.path.join(os.path.realpath(sf_dir), f"{table}.parquet")
+    if os.path.isdir(p):
+        return sorted(
+            os.path.join(p, f)
+            for f in os.listdir(p)
+            if f.endswith(".parquet") or f.startswith("part-")
+        )
+    return [p] if os.path.exists(p) else []
+
+
+def table_fingerprint(sf_dir: str, table: str, *salt: str) -> str:
+    """Corpus-identity key: names, sizes and mtimes of every data file of
+    ``table`` — never a data scan. A part file rewritten in place changes
+    the key even when its directory's own inode does not. ``salt`` folds in
+    whatever else the keyed artifact depends on (an algorithm version and
+    its constants)."""
+    parts = list(salt)
+    for f in table_files(sf_dir, table):
+        st = os.stat(f)
+        parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
+    return hashlib.md5("|".join(parts).encode()).hexdigest()[:16]
 
 
 def _load_events(spark: SparkSession, path: str) -> DataFrame:
@@ -73,9 +99,3 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
     names = names or TABLES
     return {n: load_table(spark, sf_dir, n) for n in names}
 
-
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register each table as a temp view so ``spark.sql`` queries mirror the
-    DuckDB oracle's pre-registered views one-to-one."""
-    for name, df in load_tables(spark, sf_dir, *names).items():
-        df.createOrReplaceTempView(name)

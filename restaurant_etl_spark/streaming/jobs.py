@@ -32,13 +32,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from restaurant_etl_spark.sources.tables import load_table
+from restaurant_etl_spark.sources.tables import load_table, table_fingerprint
 
 WATERMARK = "30 minutes"
 SESSION_GAP = "30 minutes"
 
 #: bump when the staged-events FORMAT changes (not just the source data) —
-#: v2: ts normalized to TIMESTAMP (µs, UTC-adjusted). Keyed into the staging
+#: v2: ts normalized to TIMESTAMP (µs, UTC-adjusted). Salted into the staging
 #: fingerprint so a directory staged by older code is never silently reused.
 STAGED_EVENTS_VERSION = "v2"
 
@@ -54,7 +54,7 @@ def stage_events_source(spark: SparkSession, sf_dir: str, out_dir: str | None = 
             load_table(spark, sf_dir, "events").write.mode("overwrite").parquet(out_dir)
         return out_dir
 
-    from restaurant_etl_spark.sources.staging import source_fingerprint, stage_once
+    from restaurant_etl_spark.sources.staging import stage_once
 
     def build(scratch: str) -> None:
         load_table(spark, sf_dir, "events").write.mode("overwrite").parquet(
@@ -63,7 +63,7 @@ def stage_events_source(spark: SparkSession, sf_dir: str, out_dir: str | None = 
 
     base = stage_once(
         f"events_stream_src_{os.path.basename(os.path.normpath(sf_dir))}",
-        f"{STAGED_EVENTS_VERSION}_{source_fingerprint(os.path.join(sf_dir, 'events.parquet'))}",
+        table_fingerprint(sf_dir, "events", STAGED_EVENTS_VERSION),
         build,
     )
     return os.path.join(base, "data")

@@ -10,11 +10,20 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _require_git_history():
+    """The artifact resolvers read committed BENCH_r*.json revisions; a
+    tree exported without its history (``git archive``) has none."""
+    if not os.path.exists(os.path.join(REPO, ".git")):
+        pytest.skip("checkout has no git history (an export, not a clone)")
 
 
 # ---------------------------------------------------------------------------
@@ -66,6 +75,7 @@ def test_tag_rev_skips_uncommitted_newest_artifact():
     """With an uncommitted BENCH_r999.json present (exactly the state the
     driver leaves the tree in mid-round), the resolver must fall back to
     the newest COMMITTED artifact's commit instead of returning None."""
+    _require_git_history()
     fake = os.path.join(REPO, "BENCH_r999.json")
     committed = subprocess.run(
         ["git", "log", "-1", "--format=%H", "--", "BENCH_r13.json"],
@@ -188,6 +198,7 @@ def test_previous_round_baseline_skips_uncommitted_artifact(monkeypatch):
     """A mid-round re-run with an uncommitted BENCH_r999.json in the tree
     must triage against the newest COMMITTED artifact, not HEAD's own
     round's numbers (which would suppress every envelope flag)."""
+    _require_git_history()
     fake = os.path.join(REPO, "BENCH_r999.json")
     monkeypatch.delenv("SPARK_GRAFT_PREV_BENCH", raising=False)
     try:
@@ -218,6 +229,7 @@ def test_tag_rev_and_prev_queries_share_resolution():
     """Both consumers must name the same committed artifact (the shared
     helper is the fix — two parallel walks is how the r13 asymmetry
     happened in the first place)."""
+    _require_git_history()
     found = bench._newest_committed_bench_artifact()
     assert found is not None
     assert bench._tag_baseline_rev() == found[1]

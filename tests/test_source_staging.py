@@ -1,10 +1,12 @@
-"""Atomic fingerprint-keyed staging (sources/staging.py)."""
+"""Atomic fingerprint-keyed staging (sources/staging.py) and the table
+fingerprint it is keyed on (sources/tables.py)."""
 
 from __future__ import annotations
 
 import os
 
-from restaurant_etl_spark.sources.staging import source_fingerprint, stage_once
+from restaurant_etl_spark.sources.staging import stage_once
+from restaurant_etl_spark.sources.tables import table_fingerprint
 
 
 def test_stage_once_builds_once(tmp_path, monkeypatch):
@@ -59,10 +61,30 @@ def test_partial_stale_dir_is_replaced(tmp_path, monkeypatch):
     tempfile.tempdir = None
 
 
-def test_source_fingerprint_tracks_mtime_and_size(tmp_path):
+def test_table_fingerprint_tracks_mtime_and_size(tmp_path):
     f = tmp_path / "src.parquet"
     f.write_bytes(b"abc")
-    fp1 = source_fingerprint(str(f))
-    assert fp1 == source_fingerprint(str(f))  # stable
+    fp1 = table_fingerprint(str(tmp_path), "src")
+    assert fp1 == table_fingerprint(str(tmp_path), "src")  # stable
     f.write_bytes(b"abcd")
-    assert source_fingerprint(str(f)) != fp1
+    assert table_fingerprint(str(tmp_path), "src") != fp1
+
+
+def test_table_fingerprint_sees_part_file_rewritten_in_place(tmp_path):
+    """A Spark-written directory table: rewriting one part file in place
+    leaves the directory's own size and mtime as they were, so a key built
+    from the directory inode would serve the stage stale."""
+    d = tmp_path / "src.parquet"
+    d.mkdir()
+    (d / "part-00000.parquet").write_bytes(b"first part")
+    (d / "part-00001.parquet").write_bytes(b"second part")
+    (d / "_SUCCESS").touch()
+    dir_st = os.stat(d)
+    fp1 = table_fingerprint(str(tmp_path), "src")
+
+    (d / "part-00001.parquet").write_bytes(b"second part, rewritten")
+    assert (os.stat(d).st_size, os.stat(d).st_mtime_ns) == (
+        dir_st.st_size,
+        dir_st.st_mtime_ns,
+    )
+    assert table_fingerprint(str(tmp_path), "src") != fp1

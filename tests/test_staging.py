@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from restaurant_etl_spark.operators import staging
+from restaurant_etl_spark.sources import staging
 from restaurant_etl_spark.operators.dedup import _staged_common, _staged_sa
 
 
